@@ -10,14 +10,16 @@ import graft.functions.{FlyqCodec, TextHashes, TopK, VectorOps}
 
 /** Library entry point for `spark.sql.extensions=graft.GraftExtensions`:
   * injects the [[graft.plans.GroupedPrefixStrategy]] planner strategy and
-  * registers the SQL-expressible custom functions, so a pure-SQL user
-  * gets the whole surface (`SELECT simhash16(hash32_array(words)) ...`)
+  * its [[graft.plans.PruneGroupedPrefix]] optimizer rule, and registers
+  * the SQL-expressible custom functions, so a pure-SQL user gets the whole
+  * surface (`SELECT simhash16(hash32_array(words)) ...`)
   * with zero Scala. [[GraftFunctions.register]] does the same for an
   * already-running session (the operators also self-register the
   * strategy at DataFrame construction, so either path works). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.GroupedPrefixStrategy)
+    ext.injectOptimizerRule(_ => graft.plans.PruneGroupedPrefix)
     GraftFunctions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }

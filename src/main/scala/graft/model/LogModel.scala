@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * `flyq-server/src/core/segment.rs:14-28`).
   *
   * Every broker-semantics query (watermarks, consumer lag, partition health,
-  * consume, retention) derives from `toLog`, so the derivation must be a
-  * deterministic, oracle-reproducible relational computation:
+  * consume, retention) derives from `toLog` — or, when it needs only
+  * per-partition counts, from its offset-free prefix `keyed` — so the
+  * derivation must be a deterministic, oracle-reproducible relational
+  * computation:
   *
   *  - `part_id`  — key-hash partitioner (reference `topic.rs:76-93`). The
   *    reference hashes the key with XXH3-64; neither Spark SQL nor the DuckDB
@@ -90,6 +92,16 @@ object LogModel {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     graft.sources.Tables.load(spark, sfDir, "events")
 
+  /** events → keyed events: the partitioner's columns without offsets.
+    * Adds `mkey` (string key) and `part_id` (key-hash partition). Rows
+    * whose output needs only per-partition record counts read this, not
+    * [[toLog]]: one scan and a partial aggregate, no range shuffle. */
+  def keyed(events: DataFrame, n: Int = NumPartitions): DataFrame =
+    events
+      .withColumn("mkey", col("user_id").cast("string"))
+      .withColumn("part_id",
+        pmod(portableHash(col("user_id")), lit(n.toLong)).cast("long"))
+
   /** events → log records with part_id / msg_offset / record_size.
     * Columns: event_id, ts, user_id, event_type, value, props,
     * mkey (string key), part_id, msg_offset, record_size.
@@ -101,17 +113,13 @@ object LogModel {
     * 100 TB — round-1 verdict's core scale-killer); the two-phase form runs
     * at full cluster parallelism with an O(tasks × partitions) driver
     * prefix-sum. */
-  def toLog(events: DataFrame, n: Int = NumPartitions): DataFrame = {
-    val withPart = events
-      .withColumn("mkey", col("user_id").cast("string"))
-      .withColumn("part_id",
-        pmod(portableHash(col("user_id")), lit(n.toLong)).cast("long"))
+  def toLog(events: DataFrame, n: Int = NumPartitions): DataFrame =
     graft.plans.OrderedIndex.withExclusivePrefix(
-        withPart, Seq("part_id"), Seq("ts", "event_id"), None, "msg_offset")
+        keyed(events, n), Seq("part_id"), Seq("ts", "event_id"), None,
+        "msg_offset")
       .withColumn("record_size",
         (lit(32) + octet_length(col("mkey")) + octet_length(col("props")))
           .cast("long"))
-  }
 
   /** log → + segment_id, via running byte total per partition (same
     * two-phase prefix machinery, summing record_size instead of counting;
@@ -151,16 +159,15 @@ object LogModel {
     * (topic, partition). Same two-phase grouped prefix as [[toLog]], just
     * with `topic` in the grouping key — still one range shuffle at full
     * parallelism. */
-  def toTopicLog(events: DataFrame, n: Int = NumPartitions): DataFrame = {
-    val withPart = events
-      .withColumn("topic", topicOf(col("event_type")))
-      .withColumn("mkey", col("user_id").cast("string"))
-      .withColumn("part_id",
-        pmod(portableHash(col("user_id")), lit(n.toLong)).cast("long"))
+  def toTopicLog(events: DataFrame, n: Int = NumPartitions): DataFrame =
     graft.plans.OrderedIndex.withExclusivePrefix(
-      withPart, Seq("topic", "part_id"), Seq("ts", "event_id"), None,
-      "msg_offset")
-  }
+      keyedTopics(events, n), Seq("topic", "part_id"), Seq("ts", "event_id"),
+      None, "msg_offset")
+
+  /** [[keyed]] plus the `topic` route: the multi-topic log without
+    * offsets. */
+  def keyedTopics(events: DataFrame, n: Int = NumPartitions): DataFrame =
+    keyed(events.withColumn("topic", topicOf(col("event_type"))), n)
 
   /** Watermark triple per partition (reference `partition.rs:172-178`):
     * low = first retained offset, high = last written offset,
@@ -170,6 +177,20 @@ object LogModel {
       min("msg_offset").as("low_off"),
       max("msg_offset").as("high_off"),
       (max("msg_offset") + 1).as("log_end_off"))
+
+  /** [[watermarks]] from record counts, over keyed events (no offsets):
+    * low = 0, high = n − 1, log_end = n per group. These are exactly the
+    * dense 0-based offsets [[toLog]] / [[toTopicLog]] assign, and exactly
+    * the reference's per-partition counters (`partition_state.rs:4-8`),
+    * so no offset has to be derived to answer a watermark or lag query.
+    * A partition that received no records has no row, as in
+    * [[watermarks]]. `groupCols` = `part_id`, or `topic, part_id` for the
+    * multi-topic log. */
+  def countWatermarks(keyed: DataFrame,
+                      groupCols: Seq[String] = Seq("part_id")): DataFrame =
+    keyed.groupBy(groupCols.map(col): _*).agg(count(lit(1)).as("n"))
+      .select(groupCols.map(col) ++ Seq(lit(0L).as("low_off"),
+        (col("n") - 1).as("high_off"), col("n").as("log_end_off")): _*)
 
   /** Synthetic-but-deterministic committed offsets for two consumer groups
     * (the reference's OffsetTracker state, `offset_tracker.rs:6-10`):

@@ -4,25 +4,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.LogModel
 import graft.model.LogModel._
 
 /** Broker-semantics queries over the canonical log model — each method is
   * one operator row from SURVEY.md §2, re-expressed as a deterministic
   * DataFrame transform so the driver's DuckDB oracle can check it.
   *
-  * Scale notes apply to all: the log derivation is the only wide stage
-  * (two-phase range prefix at full parallelism — see
-  * graft.plans.OrderedIndex); everything downstream is either a
-  * partial-aggregable groupBy on `part_id` (map-side combine, 4..N groups
-  * → tiny shuffle), a `min_by` consume aggregate, or an explode/broadcast
-  * of an already-tiny aggregate. No query funnels raw rows into a
-  * partition-count-bounded sort.
+  * Scale notes apply to all. Rows that read offsets derive the log: a
+  * two-phase range prefix at full parallelism (graft.plans.OrderedIndex),
+  * plus a second prefix pass for segment ids. Rows that need only the
+  * watermarks — watermarks, the lag family, commit state, the committed
+  * side of consume_with_group — read [[countWatermarks]] over keyed
+  * events instead: one scan and a partial aggregate, no range shuffle.
+  * Everything downstream is either a partial-aggregable groupBy
+  * on `part_id` (map-side combine, 4..N groups → tiny shuffle), a
+  * `min_by` consume aggregate, or an explode/broadcast of an already-tiny
+  * aggregate. No query funnels raw rows into a partition-count-bounded
+  * sort.
   */
 object BrokerOps {
 
   private def log(spark: SparkSession, sfDir: String): DataFrame =
     toLog(events(spark, sfDir))
+
+  /** Per-partition watermarks from record counts (no offset derivation). */
+  private def countWm(spark: SparkSession, sfDir: String): DataFrame =
+    countWatermarks(keyed(events(spark, sfDir)))
 
   /** W4 — offset assignment: the full log mapping (event → partition,offset).
     * Reference `partition.rs:107-142`. */
@@ -100,7 +107,7 @@ object BrokerOps {
   /** O1 — watermark triple per partition. Reference `partition.rs:172-178`,
     * semantics pinned by `flyq-server/tests/watermark_apis.rs:38-42`. */
   def watermarkQuery(spark: SparkSession, sfDir: String): DataFrame =
-    watermarks(log(spark, sfDir))
+    countWm(spark, sfDir)
 
   /** Kafka-style KEY compaction decision (beyond-reference extension —
     * the reference retains by time/size only): per (part_id, mkey) the
@@ -129,7 +136,7 @@ object BrokerOps {
     * (N_partitions rows), so Spark broadcast-joins them; the scan+agg is
     * the only big stage. */
   def consumerLag(spark: SparkSession, sfDir: String): DataFrame =
-    consumerLagFrom(log(spark, sfDir))
+    consumerLagFromWm(countWm(spark, sfDir))
 
   /** Flagship over a MATERIALIZED log (the production read path —
     * [[graft.sources.LogTable]]): offsets read as data with partition
@@ -141,11 +148,13 @@ object BrokerOps {
     consumerLagFrom(graft.sources.LogTable.readLog(spark, path))
   }
 
-  private[graft] def consumerLagFrom(log: DataFrame): DataFrame = {
+  private[graft] def consumerLagFrom(log: DataFrame): DataFrame =
+    consumerLagFromWm(watermarks(log))
+
+  private def consumerLagFromWm(wm: DataFrame): DataFrame = {
     // Single derivation: committed offsets explode out of the one watermark
     // aggregate (round 1 executed the scan+window three times; the explode
     // keeps high_off alongside, so no join back is needed at all).
-    val wm = watermarks(log)
     committedOffsetsFromWm(wm)
       .withColumn("lag",
         greatest(col("high_off") - col("committed"), lit(0L)))
@@ -173,8 +182,8 @@ object BrokerOps {
     * ALL topics even when a filter is passed, because asking about fewer
     * topics doesn't change the group's stored state.
     *
-    * Scale: one scan + one grouped-prefix pass; everything after the
-    * (topic, partition) watermark aggregate operates on a
+    * Scale: one scan + one partial (topic, partition) count aggregate (the
+    * high watermark is count − 1); everything after it operates on a
     * topics×partitions-row frame (window, explode, rollup — all tiny). */
   /** Topic list for the oracle-checked Some(...) path of
     * [[consumerLagMultiTopic]] — includes a topic the broker does NOT
@@ -184,8 +193,8 @@ object BrokerOps {
 
   def consumerLagMultiTopic(spark: SparkSession, sfDir: String,
                             topics: Option[Seq[String]] = None): DataFrame =
-    consumerLagMultiTopicFrom(
-      LogModel.toTopicLog(events(spark, sfDir)), topics)
+    consumerLagMultiTopicFrom(countWatermarks(
+      keyedTopics(events(spark, sfDir)), Seq("topic", "part_id")), topics)
 
   /** [[consumerLagMultiTopic]] over a MATERIALIZED topic log (the
     * two-topic production read path — `LogTable.ensureMaterializedTopicLog`
@@ -197,14 +206,14 @@ object BrokerOps {
                                         sfDir: String): DataFrame = {
     val path = graft.sources.LogTable.ensureMaterializedTopicLog(spark, sfDir)
     consumerLagMultiTopicFrom(
-      graft.sources.LogTable.readLog(spark, path), None)
+      graft.sources.LogTable.readLog(spark, path)
+        .groupBy("topic", "part_id").agg(max("msg_offset").as("high_off")),
+      None)
   }
 
+  /** `hwAll`: the high watermark per (topic, part_id). */
   private def consumerLagMultiTopicFrom(
-      topicLog: DataFrame, topics: Option[Seq[String]]): DataFrame = {
-    val hwAll = topicLog
-      .groupBy("topic", "part_id")
-      .agg(max("msg_offset").as("high_off"))
+      hwAll: DataFrame, topics: Option[Seq[String]]): DataFrame = {
     val withGlobal = hwAll.withColumn("g_high",
       sum(col("high_off") + 1).over(Window.partitionBy("part_id")) - 1)
     val entries = array(
@@ -282,19 +291,20 @@ object BrokerOps {
                        group: String = "analytics"): DataFrame = {
     // Committed offsets are a tiny per-partition aggregate (partial-agg →
     // N_partitions rows) broadcast back onto the log; the consume itself is
-    // a min_by aggregate. Both branches share the same `l` plan, so the
-    // log derivation's range shuffle is computed once and reused.
-    val l = log(spark, sfDir)
+    // a min_by aggregate. The committed side reads the high watermark from
+    // record counts, so only the consume side derives offsets: deriving
+    // them on both sides ran the prefix's pass-1 and pass-2 jobs twice.
     // unknown groups default to committed = 0 (reference
     // `log_engine.rs:146-157`: OffsetTracker fetch falls back to 0, so an
     // untracked group reads from the beginning)
     val committedExpr = group match {
-      case "analytics" => floor(max("msg_offset") / 2).cast("long")
-      case "billing" => max("msg_offset")
+      case "analytics" => floor(col("high_off") / 2).cast("long")
+      case "billing" => col("high_off")
       case _ => lit(0L)
     }
-    val committed = l.groupBy("part_id").agg(committedExpr.as("committed"))
-    l.join(broadcast(committed), Seq("part_id"))
+    val committed = countWm(spark, sfDir)
+      .select(col("part_id"), committedExpr.as("committed"))
+    log(spark, sfDir).join(broadcast(committed), Seq("part_id"))
       .filter(col("msg_offset") >= col("committed"))
       .groupBy("part_id")
       .agg(min_by(struct(col("msg_offset"), col("event_id")),
@@ -312,7 +322,7 @@ object BrokerOps {
   def commitOffsetState(spark: SparkSession, sfDir: String): DataFrame = {
     // Base store + new-commit batch explode out of ONE watermark aggregate
     // (a union of selects would execute the scan per branch).
-    val wm = watermarks(log(spark, sfDir))
+    val wm = countWm(spark, sfDir)
     val baseEntries = array(
       struct(lit("analytics").as("grp"),
         floor(col("high_off") / 2).cast("long").as("committed"),
@@ -336,16 +346,19 @@ object BrokerOps {
     * Reference `partition.rs:225-308`. Expressed as: per-segment stats, a
     * reverse running byte total (newest→oldest) for the size rule, and the
     * low-watermark bump (`partition.rs:285`) = min retained offset.
-    * Output: per partition, retained segment/byte counts + new low_off. */
+    * Output: per partition, retained segment/byte counts + new low_off.
+    * The cutoff is max(ts) over the raw events — the same value as over
+    * the segment stats — so the log is derived once, not once per side of
+    * the cross join. */
   def retentionFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val seg = withSegments(log(spark, sfDir))
-    val segStats = seg.groupBy("part_id", "segment_id").agg(
+    val ev = events(spark, sfDir)
+    val segStats = withSegments(toLog(ev)).groupBy("part_id", "segment_id").agg(
       max("ts").as("seg_max_ts"),
       sum("record_size").as("seg_bytes"),
       min("msg_offset").as("base_off"),
       max("msg_offset").as("last_off"))
-    val cutoff = segStats.agg(
-      (max("seg_max_ts") - expr(s"INTERVAL $RetentionDays DAYS")).as("cutoff"))
+    val cutoff = ev.agg(
+      (max("ts") - expr(s"INTERVAL $RetentionDays DAYS")).as("cutoff"))
     val wNewest = Window.partitionBy("part_id").orderBy(col("segment_id").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val wActive = Window.partitionBy("part_id")

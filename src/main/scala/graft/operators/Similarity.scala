@@ -320,20 +320,8 @@ object Similarity {
     * File of the URI answers length 0 / mtime 0, making the fingerprint
     * CONSTANT, so regenerated inputs would never evict stale cached
     * assignments while fresh scans read the new data. */
-  private def embFingerprint(spark: SparkSession, sfDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts: Seq[org.apache.hadoop.fs.FileStatus] =
-      try {
-        val st = fs.getFileStatus(p)
-        if (st.isDirectory)
-          fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
-        else Seq(st)
-      } catch { case _: java.io.FileNotFoundException => Seq.empty }
-    java.lang.Long.toHexString(
-      parts.foldLeft(17L)((h, f) =>
-        ((h * 31 + f.getLen) * 31) + f.getModificationTime))
-  }
+  private def embFingerprint(spark: SparkSession, sfDir: String): String =
+    graft.sources.Tables.fingerprint(spark, s"$sfDir/embeddings.parquet")
 
   /** Release every persist-once artifact this object holds (centroid
     * assignments, refined k-means assignments) — wired into the

@@ -7,8 +7,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
@@ -75,21 +76,25 @@ object OrderedIndex {
     org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, node)
   }
 
-  /** Idempotently install [[GroupedPrefixStrategy]] on the session —
-    * called at DataFrame construction so queries work on ANY session the
-    * harness hands us, not just ones we built. */
+  /** Idempotently install [[GroupedPrefixStrategy]] and
+    * [[PruneGroupedPrefix]] on the session — called at DataFrame
+    * construction so queries work on ANY session the harness hands us,
+    * not just ones we built. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val e = spark.experimental
     e.synchronized {
       if (!e.extraStrategies.contains(GroupedPrefixStrategy))
         e.extraStrategies = e.extraStrategies :+ GroupedPrefixStrategy
+      if (!e.extraOptimizations.contains(PruneGroupedPrefix))
+        e.extraOptimizations = e.extraOptimizations :+ PruneGroupedPrefix
     }
   }
 }
 
-/** Logical node: output = child's columns plus the prefix column. Opaque to
-  * the optimizer (no pushdown through it), which is correct: every use site
-  * feeds it the minimal projection it needs. */
+/** Logical node: output = child's columns plus the prefix column. No
+  * predicate is pushed through it. Spark's `ColumnPruning` narrows its
+  * child to the columns the parent and the node read, and
+  * [[PruneGroupedPrefix]] removes it when no parent reads the prefix. */
 case class GroupedPrefix(groupCols: Seq[Attribute],
                          order: Seq[SortOrder],
                          valueCol: Option[Attribute],
@@ -100,6 +105,21 @@ case class GroupedPrefix(groupCols: Seq[Attribute],
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedPrefix =
     copy(child = newChild)
+}
+
+/** Drops a [[GroupedPrefix]] whose prefix column the projection above it
+  * does not read: its range shuffle and two passes would compute a column
+  * nobody reads (a `groupBy(part_id)` count over `toLog`, say). Spark's
+  * `ColumnPruning` narrows the node's child but cannot remove the node.
+  * [[OrderedIndex.ensureRegistered]] installs it in the optimizer's
+  * user-provided batch, which runs after that pruning has left the
+  * minimal projection directly above the node. */
+object PruneGroupedPrefix extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan transformDown {
+    case p @ Project(list, g: GroupedPrefix)
+        if !list.exists(_.references.contains(g.prefixAttr)) =>
+      p.copy(child = g.child)
+  }
 }
 
 object GroupedPrefixStrategy extends SparkStrategy {

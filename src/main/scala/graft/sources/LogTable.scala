@@ -43,9 +43,10 @@ object LogTable {
   /** Materialize the sfDir's log once per machine (marker-checked) and
     * return its path — the production read path: offsets as DATA, not a
     * recompute. Benched as `consumer_lag_materialized`. The cache key
-    * includes a fingerprint of the input files (size + mtime), so
-    * REGENERATED testdata at the same path invalidates the snapshot
-    * instead of silently serving stale offsets. */
+    * includes a fingerprint of the input files (size + mtime, statted
+    * through the Hadoop FS, so a `file:` or remote sfDir is fingerprinted
+    * too), so REGENERATED testdata at the same path invalidates the
+    * snapshot instead of silently serving stale offsets. */
   def ensureMaterialized(spark: SparkSession, sfDir: String): String =
     ensureSnapshot(spark, sfDir, "logtable", Seq("part_id")) {
       graft.model.LogModel.toLog(graft.model.LogModel.events(spark, sfDir))
@@ -65,11 +66,7 @@ object LogTable {
                              variant: String, partitionCols: Seq[String])(
       build: => DataFrame): String = synchronized {
     val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-    val src = new java.io.File(s"$sfDir/events.parquet")
-    val parts: Seq[java.io.File] =
-      if (src.isDirectory) src.listFiles().toSeq.sortBy(_.getName) else Seq(src)
-    val fp = java.lang.Long.toHexString(
-      parts.foldLeft(17L)((h, f) => ((h * 31 + f.length) * 31) + f.lastModified))
+    val fp = Tables.fingerprint(spark, s"$sfDir/events.parquet")
     val tmpRoot = System.getProperty("java.io.tmpdir")
     val prefix = s"graft_${variant}_v$SemanticsVersion${tag}_"
     val path = s"$tmpRoot/$prefix$fp"
@@ -124,8 +121,9 @@ object LogTable {
     }
 
   /** Read a materialized log back with the canonical column types (the
-    * partition-dir column comes back as INT; the log model uses LONG). */
+    * partition-dir column comes back as INT; the log model uses LONG).
+    * The schema is inferred once per snapshot ([[Tables.readParquet]]). */
   def readLog(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.readParquet(spark, path)
       .withColumn("part_id", col("part_id").cast("long"))
 }

@@ -1,7 +1,10 @@
 package graft.sources
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central loader for the driver testdata tables.
   *
@@ -125,23 +128,72 @@ object Tables {
     m.contains("NANOS") || m.contains("nanosAsLong")
   }
 
+  /** Size + mtime fingerprint of every file under `path` (a file or a
+    * directory, listed recursively), statted through the path's own
+    * Hadoop FileSystem — never java.io.File, whose stat of an
+    * s3a/hdfs/`file:` URI answers "no such file" and makes the fingerprint
+    * constant. A missing path fingerprints as empty. */
+  private[graft] def fingerprint(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+    try {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) files += it.next()
+    } catch { case _: java.io.FileNotFoundException => }
+    java.lang.Long.toHexString(
+      files.sortBy(_.getPath.toString).foldLeft(17L)((h, f) =>
+        ((h * 31 + f.getPath.getName.hashCode) * 31 + f.getLen) * 31 +
+          f.getModificationTime))
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Session confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(NanosAsLong,
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.caseSensitive")
+
+  /** path → (fingerprint + inference confs, inferred schema, needs the
+    * nanos flag). One entry per path: a regenerated file replaces it. */
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType, Boolean)]
+
+  /** `spark.read.parquet(path)` without a schema-inference job per call:
+    * Spark's parquet inference launches one job on every read, which at
+    * broker-query sizes costs more than the query. The schema is inferred
+    * once per input fingerprint and handed to the reader. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val fp = fingerprint(spark, path)
+    def token = fp + InferenceConfs.map(spark.conf.getOption).mkString("|", "|", "")
+    val (schema, nanos) = Option(schemaMemo.get(path)).filter(_._1 == token) match {
+      case Some((_, s, n)) => (s, n)
+      case None =>
+        val (s, n) =
+          try (spark.read.parquet(path).schema, false)
+          catch {
+            case e: Exception if isNanosVintage(e) =>
+              spark.conf.set(NanosAsLong, "true")
+              (spark.read.parquet(path).schema, true)
+          }
+        // keyed by the confs as they are now (after any flag flip), which
+        // is how this session finds the entry on its next call
+        schemaMemo.put(path, (token, s, n))
+        (s, n)
+    }
+    // TIMESTAMP(NANOS) vintage: readable only with the legacy flag, which
+    // must REMAIN set afterwards — it is consulted again at execution time
+    // for this relation's decode. Setting it unconditionally on every load
+    // (the old code) silently flipped how an EMBEDDING application's own
+    // unrelated nanos parquet reads decode for the rest of the session
+    // (LongType instead of failing loudly) — r17 data-plane review #3;
+    // only a directory that actually ships nanos pays that.
+    if (nanos) spark.conf.set(NanosAsLong, "true")
+    spark.read.schema(schema).parquet(path)
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val df =
-      try spark.read.parquet(path)
-      catch {
-        case e: Exception if isNanosVintage(e) =>
-          // TIMESTAMP(NANOS) vintage: readable only with the legacy
-          // flag, which must REMAIN set afterwards — it is consulted
-          // again at execution time for this relation's decode. Setting
-          // it unconditionally on every load (the old code) silently
-          // flipped how an EMBEDDING application's own unrelated nanos
-          // parquet reads decode for the rest of the session (LongType
-          // instead of failing loudly) — r17 data-plane review #3; now
-          // only a directory that actually ships nanos pays that.
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(path)
-      }
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // epoch-nanos as long. ts DIV 1000: integer division (a double

@@ -45,6 +45,26 @@ class LogTableSpec extends AnyFunSuite {
     assert(got.count() > 0)
   }
 
+  test("a file: URI sfDir is fingerprinted: rewriting events rebuilds the snapshot") {
+    // a java.io.File stat of a URI finds no file, so the fingerprint was
+    // constant and a regenerated input got the stale snapshot's offsets
+    val dir = Files.createTempDirectory("flyq-logtable-uri")
+    val sfUri = dir.toUri.toString.stripSuffix("/")
+    assert(sfUri.startsWith("file:"))
+    val ev = LogModel.events(spark, sf).orderBy("event_id")
+    def writeEvents(n: Int): Unit =
+      ev.limit(n).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    try {
+      writeEvents(600)
+      val first = LogTable.ensureMaterialized(spark, sfUri)
+      assert(LogTable.readLog(spark, first).count() === 600)
+      writeEvents(400)
+      val second = LogTable.ensureMaterialized(spark, sfUri)
+      assert(second !== first, "snapshot not rebuilt for a rewritten input")
+      assert(LogTable.readLog(spark, second).count() === 400)
+    } finally LogTable.dropSnapshots(sfUri)
+  }
+
   test("rotation analog: multiple files per partition directory") {
     val files = new java.io.File(s"$tablePath/part_id=1")
       .listFiles().count(_.getName.endsWith(".parquet"))
