@@ -476,31 +476,39 @@ object PipelineStreams {
   /** [[minhashNearDupStreamIndexed]] with BATCH-KEY PUSHDOWN — the
     * [[ngramNearDupBatchPushed]] mechanism on the word-set gate: the
     * micro-batch's distinct band keys constrain the bucketed scan (the
-    * sortBy'd band_key column) before the join. Same per-batch flag
+    * sortBy'd band_key column) before the join, when the index has the
+    * key pages to skip ([[ProbeStamp.pushCap]]). Same per-batch flag
     * contract; answers spec-pinned against the plain bucketed probe. */
   def minhashNearDupBatchPushed(spark: SparkSession, batch: DataFrame,
                                 indexTable: String): DataFrame = {
     requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
-    minhashPushedProbe(spark, batch, spark.table(indexTable))
+    minhashBatchProbe(spark, batch, spark.table(indexTable),
+      probeStamp(spark, indexTable).pushCap(graft.operators.Dedup.NumBands))._1
   }
 
-  private def minhashPushedProbe(spark: SparkSession, batch: DataFrame,
-                                 base: DataFrame): DataFrame =
-    minhashVerifyRollup(minhashBandFrame(batch),
-      prunedBase(spark, base, "band_key", minhashBandFrame(batch)))
+  /** One batch of the word-set probe, pushing its keys under `cap` (see
+    * [[prunedBase]]); returns the flag frame and the form taken. */
+  private def minhashBatchProbe(spark: SparkSession, batch: DataFrame,
+      base: DataFrame, cap: Int): (DataFrame, String) = {
+    val banded = minhashBandFrame(batch)
+    val (scan, form) = prunedBase(spark, base, "band_key", banded, cap)
+    (minhashVerifyRollup(banded, scan), form)
+  }
 
   /** foreachBatch writer for [[minhashNearDupBatchPushed]] — catalog
-    * resolution + banding check paid once at construction. */
+    * resolution, banding check and probe stamp paid once at
+    * construction. */
   def minhashNearDupPushedWriter(spark: SparkSession, docs: DataFrame,
       indexTable: String)(sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
     val base = spark.table(indexTable)
+    val cap = probeStamp(spark, indexTable)
+      .pushCap(graft.operators.Dedup.NumBands)
     docs.writeStream.foreachBatch {
       (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        PushThresholdScope.scoped(spark, configuredChunk(spark)) {
-          sink(minhashPushedProbe(spark, b.toDF(), base), id)
-        }
+        gateBatch(spark, "minhash", cap, id, sink)(
+          minhashBatchProbe(spark, b.toDF(), base, cap))
     }
   }
 
@@ -510,33 +518,103 @@ object PipelineStreams {
     * decides pushed vs plain, so a future index whose key layout
     * degrades page pruning cannot silently inherit the pushed path's
     * simhash failure mode (91 MB / 30.7 s per batch, measured and
-    * removed in r14). Requires an index built after the stamp existed
-    * (rebuild with [[graft.operators.Dedup.writeMinhashIndexTable]]). */
+    * removed in r14); the `graft.key_pages` / `graft.key_files` stamps
+    * then cap each batch's pushed key set ([[ProbeStamp.autoCap]]), and
+    * an index too small to skip pages never runs the key collect.
+    * Requires an index built after the stamps existed (rebuild with
+    * [[graft.operators.Dedup.writeMinhashIndexTable]]). */
   def minhashNearDupWriter(spark: SparkSession, docs: DataFrame,
       indexTable: String)(sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
     val base = spark.table(indexTable)
-    val pushed = selectedProbeForm(spark, indexTable) == "pushed"
+    val cap = probeStamp(spark, indexTable)
+      .autoCap(graft.operators.Dedup.NumBands)
     docs.writeStream.foreachBatch {
       (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (pushed)
-          PushThresholdScope.scoped(spark, configuredChunk(spark)) {
-            sink(minhashPushedProbe(spark, b.toDF(), base), id)
-          }
-        else sink(minhashVerifyRollup(minhashBandFrame(b.toDF()), base), id)
+        gateBatch(spark, "minhash", cap, id, sink)(
+          minhashBatchProbe(spark, b.toDF(), base, cap))
     }
   }
 
-  /** The `graft.probe_form` stamped on the index at build time; an
-    * unstamped (pre-r15) index fails fast with the rebuild hint instead
-    * of silently guessing a form. */
-  private def selectedProbeForm(spark: SparkSession, table: String): String =
-    graft.operators.Dedup.gateProbeForm(spark, table).getOrElse(
+  /** The build-time probe stamp of a gate index
+    * ([[graft.operators.Dedup.stampProbeStats]]): the measured probe
+    * form, the key column's page count summed over the index files, and
+    * the file count. */
+  private[graft] final case class ProbeStamp(form: String, keyPages: Long,
+                                             keyFiles: Int) {
+    /** Most keys one batch may push into a scan of this index: half its
+      * key pages PER FILE, never above [[MaxPushedKeys]].
+      *
+      * Per file, because every file holds a sorted run of every band
+      * (the index is bucketed on (band_j, key), so a key's band scatters
+      * it over all files, and bucket pruning needs both columns): a key
+      * falls inside one page's [min, max] in nearly every file. Parquet
+      * skips only a page whose [min, max] holds none of the pushed keys,
+      * so a pushed scan reads about keys / (pages per file) of the index,
+      * whatever its total page count. Measured with the composite gate
+      * on 4k- and 40k-row n-gram indexes (64 files, pages of 1 to 64
+      * rows and one page per file, batches of 1–100 docs, 2 cores):
+      * pushed beat plain in every case with keys ≤ 0.51 × pages per file
+      * on the 40k-row index (in 4 or 5 of 5 runs each), tied or lost from
+      * 0.78 up, and on the 4k-row index won only with pages of one row.
+      * The factor 2 keeps to the winning side of that crossover, which
+      * was not located more finely; this rule chose the faster form
+      * (within 5%) at 56 of the 60 points, a cap of half the TOTAL key
+      * pages at 30. No index with default page sizes and enough pages
+      * per file to push has been measured.
+      *
+      * 0 when not even one document's `bands` keys fit: no batch can
+      * push, and the key collect is skipped. */
+    def pushCap(bands: Int): Int = {
+      val cap = math.min(MaxPushedKeys.toLong,
+        keyPages / (2L * math.max(1, keyFiles))).toInt
+      if (cap < bands) 0 else cap
+    }
+    /** [[pushCap]] for the auto writers: 0 unless the key layout also
+      * measured `pushed`. */
+    def autoCap(bands: Int): Int = if (form == "pushed") pushCap(bands) else 0
+  }
+
+  /** The index's [[ProbeStamp]], read once; an index missing any of its
+    * stamps (built before they existed) fails fast with the rebuild hint
+    * instead of silently guessing a form. */
+  private[graft] def probeStamp(spark: SparkSession,
+                                table: String): ProbeStamp = {
+    val props = graft.operators.Dedup.tableProps(spark, table)
+    def stamp(key: String): String = props.getOrElse(key,
       throw new IllegalArgumentException(
-        s"index table $table has no graft.probe_form property — rebuild " +
-          "it with the write*IndexTable builders (probe form is measured " +
-          "from the key layout at build time)"))
+        s"index table $table has no $key property — rebuild it with the " +
+          "write*IndexTable builders (probe form, key pages and files are " +
+          "measured from the key layout at build time)"))
+    ProbeStamp(stamp("graft.probe_form"), stamp("graft.key_pages").toLong,
+      stamp("graft.key_files").toInt)
+  }
+
+  /** One writer trigger: build the batch's probe frame (which runs the
+    * key collect when it may push), inside the IN-threshold scope when
+    * `cap` allows pushing, and hand it to `sink` under a job
+    * description naming the gate and the form taken — so a listener can
+    * tell the gate's jobs apart. */
+  private def gateBatch(spark: SparkSession, gate: String, cap: Int,
+      id: Long, sink: (DataFrame, Long) => Unit)(
+      probe: => (DataFrame, String)): Unit = {
+    def run(): Unit = {
+      val (frame, form) = probe
+      described(spark, s"$gate gate: sink write ($form)")(sink(frame, id))
+    }
+    if (cap > 0) PushThresholdScope.scoped(spark, configuredChunk(spark))(run())
+    else run()
+  }
+
+  /** Runs `body` under job description `what`, restoring the caller's
+    * (the streaming engine's per-batch description) afterwards. */
+  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(prior)
+  }
 
   /** Streaming char-3-gram Jaccard near-dup detection against a STATIC
     * base corpus — the ingest-time shape of `ngram_jaccard`, completing
@@ -622,11 +700,16 @@ object PipelineStreams {
     ngramProbe(docs, spark.table(indexTable))
   }
 
-  /** Max batch-key count the pushed probes inline into the scan filter:
-    * above this the pushed form stops paying — planning and per-scan
-    * footer reads grow linearly in [[PushChunk]]-sized chunks — and the
-    * plain bucketed join is the right plan anyway: a batch that large
-    * is a backfill, not a stream trigger. */
+  /** Max batch-key count the pushed probes inline into the scan filter,
+    * on any index: above this the pushed form stops paying — planning
+    * and per-scan footer reads grow linearly in [[PushChunk]]-sized
+    * chunks — and the plain bucketed join is the right plan anyway: a
+    * batch that large is a backfill, not a stream trigger. The cap a
+    * batch actually meets is lower on an index with fewer than 2 ×
+    * 16384 key pages per file ([[ProbeStamp.pushCap]]): a pushed scan
+    * reads only the pages the keys touch, and that is less than the
+    * whole index only while the keys are few against each file's
+    * pages. */
   private[graft] val MaxPushedKeys = 16384
 
   /** Default keys per pushed IN list.
@@ -634,9 +717,13 @@ object PipelineStreams {
     * The precise In is the whole win: parquet evaluates it as an
     * or(eq, ...) chain that prunes exactly (measured 2.6-3.4 s steady
     * vs 5.0-5.4 s for the min/max-range form and 4.3 s for the plain
-    * bucketed join, x100 cold harness) - and depth-bounded ALTERNATIVE
-    * SHAPES are unreachable: a balanced Or-of-equals (or of degenerate
-    * ranges) collapses back to sources.In during optimization
+    * bucketed join, x100 cold harness). Above Spark's
+    * `inFilterThreshold` the In is pushed as parquet `FilterApi.in`
+    * instead, whose row-group statistics and page checks test only the
+    * key set's overall min and max: on a sorted 4M-key file it read
+    * 2.02M rows where the or-chain read 68k. And depth-bounded
+    * ALTERNATIVE SHAPES are unreachable: a balanced Or-of-equals (or of
+    * degenerate ranges) collapses back to sources.In during optimization
     * (verified empirically), and non-degenerate range trees push but
     * do not prune like the chain (measured 4.96 s). So the chain's
     * recursion depth is governed by CHUNKING alone, and chunk count is
@@ -695,8 +782,9 @@ object PipelineStreams {
       scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
     /** Sticky per-session floor set by DIRECT-API raises (r15 advice
       * #3): a scope-out never restores the threshold below it, so a
-      * direct plan's lazy compilation cannot be degraded to a min/max
-      * range by an interleaved scoped stream draining. Sticky by
+      * direct plan's lazy compilation cannot be degraded to parquet's
+      * min/max-only `FilterApi.in` by an interleaved scoped stream
+      * draining. Sticky by
       * design — it IS the direct form's documented "leaves it raised"
       * contract, now honored even in sessions that also run scoped
       * writers. Weak keys: unlike [[states]] (which self-evicts at
@@ -774,18 +862,25 @@ object PipelineStreams {
     * column-index skipping over the sorted layout), not a sorted-stream
     * merge of the whole base — the reference's sparse-index floor-seek
     * discipline (flyq-server/src/core/segment.rs:156-179) applied to the
-    * gate table.
+    * gate table. That read is less than the whole index only when each
+    * index file has many more key pages than the batch has keys: a page
+    * is skipped only if its [min, max] holds none of them, and a key
+    * lands in a page of nearly every file. With a page per key or fewer,
+    * every page holds one and the pushed scan reads it all, paying for
+    * the or-chain besides — hence the callers' key-page cap
+    * ([[ProbeStamp.pushCap]]).
     *
     * Two Spark mechanics handled here: (1) the session's parquet
     * IN-pushdown threshold is lifted to the chunk size — above the
-    * threshold Spark pushes a min/max RANGE instead, which covers ~the
-    * whole file for hashed keys and silently reverts the probe to a
-    * full read; (2) key sets beyond the chunk size split into chunked
-    * scans union'd together (keys are distinct → no duplicate rows),
-    * bounding each pushed or-chain's recursion depth. The Catalyst-side
-    * residual stays an InSet hash lookup either way. Chunk size =
-    * [[PushChunkConf]] if set, else [[PushChunk]] — see the depth/cost
-    * trade documented there. */
+    * threshold Spark pushes parquet `FilterApi.in`, whose statistics
+    * and page checks use only the key set's min and max, which spans
+    * ~the whole file for hashed keys and silently reverts the probe to
+    * a full read (see [[PushChunk]]); (2) key sets beyond the chunk
+    * size split into chunked scans union'd together (keys are distinct
+    * → no duplicate rows), bounding each pushed or-chain's recursion
+    * depth. The Catalyst-side residual stays an InSet hash lookup
+    * either way. Chunk size = [[PushChunkConf]] if set, else
+    * [[PushChunk]] — see the depth/cost trade documented there. */
   private[graft] def pushKeysIntoScan(spark: SparkSession, base: DataFrame,
                                       keyCol: String,
                                       keys: Array[Any]): DataFrame =
@@ -812,7 +907,9 @@ object PipelineStreams {
     * is computed twice (key collect + join) — deliberately: re-hashing
     * the BATCH is batch-sized CPU, while persisting it per micro-batch
     * would leak cache entries across thousands of triggers. Falls back
-    * to the plain bucketed join above [[MaxPushedKeys]].
+    * to the plain bucketed join when the batch has more keys than the
+    * index's stamped key pages can skip ([[ProbeStamp.pushCap]]: half
+    * the key pages per file, at most [[MaxPushedKeys]]).
     *
     * SESSION SIDE EFFECT (direct API only): a pushed probe lifts the
     * session's `spark.sql.parquet.pushdown.inFilterThreshold` to the
@@ -826,37 +923,49 @@ object PipelineStreams {
     * direct raise records a sticky session floor with
     * [[PushThresholdScope]], and scope-outs never restore the
     * threshold below it — so a draining scoped stream cannot degrade a
-    * direct plan's lazy compilation to a range scan. Deployments
+    * direct plan's lazy compilation to parquet's min/max-only
+    * `FilterApi.in` (see [[PushChunk]]). Deployments
     * using the direct form can cap the raise via
     * `spark.graft.pushdown.chunk` (see [[pushKeysIntoScan]]). */
   def ngramNearDupBatchPushed(spark: SparkSession, batch: DataFrame,
                               indexTable: String): DataFrame = {
     requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
-    ngramPushedProbe(spark, batch, spark.table(indexTable))
+    ngramBatchProbe(spark, batch, spark.table(indexTable),
+      probeStamp(spark, indexTable)
+        .pushCap(graft.operators.Dedup.NgramNumBands))._1
   }
 
-  /** Core of the pushed probe against an ALREADY-RESOLVED base frame —
-    * split from [[ngramNearDupBatchPushed]] so the streaming writer pays
-    * catalog resolution + the banding check ONCE at construction, not
-    * once per micro-batch (measured ~2.5 s/batch of fixed overhead in
-    * the cold-gate harness before the split). */
-  private def ngramPushedProbe(spark: SparkSession, batch: DataFrame,
-                               base: DataFrame): DataFrame =
-    ngramVerifyRollup(ngramBandFrame(batch),
-      prunedBase(spark, base, "pkey", ngramBandFrame(batch)))
+  /** One batch of the gram-set probe against an ALREADY-RESOLVED base
+    * frame, pushing its keys under `cap` (see [[prunedBase]]); returns
+    * the flag frame and the form taken. Split from
+    * [[ngramNearDupBatchPushed]] so the streaming writer pays catalog
+    * resolution + the banding check ONCE at construction, not once per
+    * micro-batch (measured ~2.5 s/batch of fixed overhead in the
+    * cold-gate harness before the split). */
+  private def ngramBatchProbe(spark: SparkSession, batch: DataFrame,
+      base: DataFrame, cap: Int): (DataFrame, String) = {
+    val banded = ngramBandFrame(batch)
+    val (scan, form) = prunedBase(spark, base, "pkey", banded, cap)
+    (ngramVerifyRollup(banded, scan), form)
+  }
 
   /** Shared pruning step of every pushed probe: collect the banded
     * batch's distinct keys (bounded by the doc × band fan-out; the
     * collect is one batch-sized job) and constrain the index scan via
-    * [[pushKeysIntoScan]]; key sets beyond [[MaxPushedKeys]] fall back
-    * to the plain bucketed join (a batch that large is a backfill). */
-  private def prunedBase(spark: SparkSession, base: DataFrame,
-                         keyCol: String, banded: DataFrame): DataFrame = {
-    val keys = banded.select(keyCol).distinct()
-      .limit(MaxPushedKeys + 1).collect().map(_.get(0))
-    if (keys.length > MaxPushedKeys) base
-    else pushKeysIntoScan(spark, base, keyCol, keys)
-  }
+    * [[pushKeysIntoScan]]. A key set beyond `cap`
+    * ([[ProbeStamp.pushCap]]) takes the plain bucketed join — the scan
+    * could not skip enough key pages to pay for the pushed keys — and
+    * `cap` 0 skips the collect. Returns the scan and the form taken. */
+  private[graft] def prunedBase(spark: SparkSession, base: DataFrame,
+      keyCol: String, banded: DataFrame, cap: Int): (DataFrame, String) =
+    if (cap == 0) (base, "plain")
+    else {
+      val keys = described(spark, s"gate key collect: $keyCol (pushed)") {
+        banded.select(keyCol).distinct().limit(cap + 1).collect().map(_.get(0))
+      }
+      if (keys.length > cap) (base, "plain")
+      else (pushKeysIntoScan(spark, base, keyCol, keys), "pushed")
+    }
 
   /** Wire [[ngramNearDupBatchPushed]] as a streaming sink: each
     * micro-batch probes the bucketed index with its own key set pushed
@@ -872,11 +981,12 @@ object PipelineStreams {
     // resolve the catalog table ONCE: a per-batch spark.table() is a
     // metastore round-trip per trigger, pure fixed overhead
     val base = spark.table(indexTable)
+    val cap = probeStamp(spark, indexTable)
+      .pushCap(graft.operators.Dedup.NgramNumBands)
     docs.writeStream.foreachBatch {
       (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        PushThresholdScope.scoped(spark, configuredChunk(spark)) {
-          sink(ngramPushedProbe(spark, b.toDF(), base), id)
-        }
+        gateBatch(spark, "ngram", cap, id, sink)(
+          ngramBatchProbe(spark, b.toDF(), base, cap))
     }
   }
 
@@ -888,14 +998,12 @@ object PipelineStreams {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
     val base = spark.table(indexTable)
-    val pushed = selectedProbeForm(spark, indexTable) == "pushed"
+    val cap = probeStamp(spark, indexTable)
+      .autoCap(graft.operators.Dedup.NgramNumBands)
     docs.writeStream.foreachBatch {
       (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (pushed)
-          PushThresholdScope.scoped(spark, configuredChunk(spark)) {
-            sink(ngramPushedProbe(spark, b.toDF(), base), id)
-          }
-        else sink(ngramProbe(b.toDF(), base), id)
+        gateBatch(spark, "ngram", cap, id, sink)(
+          ngramBatchProbe(spark, b.toDF(), base, cap))
     }
   }
 
@@ -1387,9 +1495,10 @@ object PipelineStreams {
     *  3. exact-dup evidence vs the base corpus (broadcast Bloom over
     *     the base word-set hashes, built ONCE at construction —
     *     `maybe_dup`, FPR-bounded),
-    *  4. near-dup evidence vs the base corpus (the PUSHED bucketed
-    *     ngram probe — per-batch index reads bounded by the batch's
-    *     own band keys, the 100 TB shape).
+    *  4. near-dup evidence vs the base corpus (the bucketed ngram
+    *     probe, PUSHED when the index has the key pages to skip — per-
+    *     batch index reads bounded by the batch's own band keys, the
+    *     100 TB shape — else the plain bucketed join).
     *
     * Output per doc: the evidence flags + the first-match
     * `drop_reason` ('eval_holdout' > 'quality' > 'duplicate' >
@@ -1411,26 +1520,33 @@ object PipelineStreams {
     val baseKeys = graft.sources.Tables.load(spark, baseSfDir, "documents")
       .select(Curation.wordSetHash(col("text")).as("th"))
     val bloomProbe = Curation.bloomLiteral(baseKeys, "th", maxBloomBytes)
-    // probe form from the index's build-time layout measurement (r14
-    // verdict #4); an unstamped index fails fast at construction.
-    val pushed = selectedProbeForm(spark, ngramIndexTable) == "pushed"
+    // probe form and key-page cap from the index's build-time layout
+    // measurement (r14 verdict #4); an unstamped index fails fast at
+    // construction.
+    val cap = probeStamp(spark, ngramIndexTable)
+      .autoCap(graft.operators.Dedup.NgramNumBands)
     docs.writeStream.foreachBatch {
       (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (pushed)
-          PushThresholdScope.scoped(spark, configuredChunk(spark)) {
-            sink(curationIngestBatch(spark, b.toDF(), base, bloomProbe,
-              pushed = true), id)
-          }
-        else sink(curationIngestBatch(spark, b.toDF(), base, bloomProbe,
-          pushed = false), id)
+        gateBatch(spark, "curation", cap, id, sink)(
+          curationIngest(spark, b.toDF(), base, bloomProbe, cap))
     }
   }
 
   /** One micro-batch of [[curationIngestWriter]] — split out so specs
-    * can drive it as a plain batch function. */
+    * can drive it as a plain batch function. `pushed` pushes the near-dup
+    * probe's keys up to [[MaxPushedKeys]], whatever the index's key
+    * pages; the writer caps them by the index's stamp instead. */
   private[graft] def curationIngestBatch(
       spark: SparkSession, batch: DataFrame, ngramBase: DataFrame,
-      bloomProbe: Option[Column], pushed: Boolean = true): DataFrame = {
+      bloomProbe: Option[Column], pushed: Boolean = true): DataFrame =
+    curationIngest(spark, batch, ngramBase, bloomProbe,
+      if (pushed) MaxPushedKeys else 0)._1
+
+  /** [[curationIngestBatch]] with the near-dup probe's push cap, also
+    * returning the form taken. */
+  private def curationIngest(
+      spark: SparkSession, batch: DataFrame, ngramBase: DataFrame,
+      bloomProbe: Option[Column], cap: Int): (DataFrame, String) = {
     import graft.operators.Curation
     val flagged = Curation.qualityFlags(batch)
       .withColumn("pass_quality", col("pass_word_count") &&
@@ -1445,11 +1561,10 @@ object PipelineStreams {
         .withColumn("maybe_dup", p)
         .drop("th")
     }
-    val near = (if (pushed) ngramPushedProbe(spark, batch, ngramBase)
-                else ngramProbe(batch, ngramBase))
-      .select(col("doc_id"), lit(true).as("near_flag"),
-        col("max_jaccard"), col("example_base_doc"))
-    withDup.join(near, Seq("doc_id"), "left")
+    val (probe, form) = ngramBatchProbe(spark, batch, ngramBase, cap)
+    val near = probe.select(col("doc_id"), lit(true).as("near_flag"),
+      col("max_jaccard"), col("example_base_doc"))
+    (withDup.join(near, Seq("doc_id"), "left")
       .withColumn("is_near_dup", coalesce(col("near_flag"), lit(false)))
       .withColumn("drop_reason",
         when(col("is_eval"), lit("eval_holdout"))
@@ -1460,6 +1575,7 @@ object PipelineStreams {
       .withColumn("final_kept", col("drop_reason") === "kept")
       .select(col("doc_id"), col("pass_quality"), col("is_eval"),
         col("maybe_dup"), col("is_near_dup"), col("max_jaccard"),
-        col("example_base_doc"), col("final_kept"), col("drop_reason"))
+        col("example_base_doc"), col("final_kept"), col("drop_reason")),
+      form)
   }
 }

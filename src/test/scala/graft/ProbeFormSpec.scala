@@ -8,15 +8,18 @@ import graft.streaming.PipelineStreams
 
 /** Round-15 (r14 verdict #4): pushed-vs-plain gate probe selection is
   * MEASURED at index build time, not hand-picked per family. The layout
-  * statistic (`Dedup.measureProbeAmp`) must separate the two regimes the
-  * r14 single-run gate table measured: ngram/minhash key layouts where
-  * the pushed IN prunes to the pages the keys touch (pushdown won), and
-  * the simhash layout where a short key interleaved under 20 combo_j
-  * runs defeats page pruning (pushed read 91 MB / 30.7 s vs plain
-  * 2 MB / 1.5 s — built, measured, removed). */
+  * statistic (`Dedup.measureKeyLayout`'s runs per file) must separate
+  * the two regimes the r14 single-run gate table measured: ngram/minhash
+  * key layouts where the pushed IN prunes to the pages the keys touch
+  * (pushdown won, on an index with many more key pages per file than
+  * the batch has keys — the `graft.key_pages` / `graft.key_files` stamps
+  * the writers cap each batch by), and the simhash layout where a short key interleaved under 20
+  * combo_j runs defeats page pruning (pushed read 91 MB / 30.7 s vs
+  * plain 2 MB / 1.5 s — built, measured, removed). */
 class ProbeFormSpec extends AnyFunSuite {
   private lazy val spark = Testing.spark
   private val sf = "/root/testdata/sf0.1"
+  private val sf01 = sf.replace("sf0.1", "sf0.01")
 
   private def keyRuns(table: String): Double =
     spark.sql(s"SHOW TBLPROPERTIES $table").collect()
@@ -50,14 +53,20 @@ class ProbeFormSpec extends AnyFunSuite {
     import spark.implicits._
     val good = "pf_auto_good"
     val bad = "pf_auto_bad"
-    Dedup.writeNgramIndexTable(spark, sf, good, 8)
+    // both indexes get the many small pages per file a large index has
+    // (one-row pages: ~1.2k per file here, for a ~400-key batch), so the
+    // key-page cap lets the good one push and only the key layout
+    // routes the bad one off the pushed path
+    Testing.withPageRows(1)(Dedup.writeNgramIndexTable(spark, sf, good, 8))
     // the silent-degradation case the stamp exists to catch: same
     // banding, same bucketing, but the file sort no longer places pkey
     // in tight runs (sorted by base_id — each doc's band rows adjacent,
     // keys scattered through every file)
-    Dedup.ngramGateIndex(spark, sf).write.mode("overwrite")
-      .bucketBy(8, "band_j", "pkey").sortBy("base_id")
-      .saveAsTable(bad)
+    Testing.withPageRows(1) {
+      Dedup.ngramGateIndex(spark, sf).write.mode("overwrite")
+        .bucketBy(8, "band_j", "pkey").sortBy("base_id")
+        .saveAsTable(bad)
+    }
     spark.sql(s"ALTER TABLE $bad SET TBLPROPERTIES" +
       s"('graft.banding' = '${Dedup.NgramBanding}')")
     val (badRuns, badForm) = Dedup.stampProbeStats(spark, bad, "pkey")
@@ -124,13 +133,106 @@ class ProbeFormSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
   }
 
+  test("an index stamped before key pages existed fails fast with the " +
+      "rebuild hint") {
+    import graft.streaming.PipelineStreams.StreamDoc
+    import spark.implicits._
+    val table = "pf_no_key_pages"
+    Dedup.writeNgramIndexTable(spark, sf01, table, 4)
+    spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES ('graft.key_pages')")
+    try {
+      val stream = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[StreamDoc](spark).toDF()
+      val batch = graft.sources.Tables.load(spark, sf01, "documents")
+        .select("doc_id", "lang", "text")
+      for (build <- Seq[() => Any](
+          () => PipelineStreams.ngramNearDupWriter(spark, stream, table)(
+            (_, _) => ()),
+          () => PipelineStreams.ngramNearDupPushedWriter(spark, stream,
+            table)((_, _) => ()),
+          () => PipelineStreams.ngramNearDupBatchPushed(spark, batch, table))) {
+        val e = intercept[IllegalArgumentException](build())
+        assert(e.getMessage.contains("graft.key_pages"))
+        assert(e.getMessage.contains("rebuild"))
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
+  test("gate jobs name their step and form; the key collect runs only " +
+      "where the index has pages to skip") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.PipelineStreams.StreamDoc
+    import spark.implicits._
+    val onePage = "pf_jobs_one_page"
+    val manyPages = "pf_jobs_many_pages"
+    // one bucket: a handful of one-page files, under 2 × 8 key pages
+    // per file
+    Dedup.writeNgramIndexTable(spark, sf01, onePage, 1)
+    Testing.withSmallPages(Dedup.writeNgramIndexTable(spark, sf01, manyPages, 4))
+    info(Seq(onePage, manyPages).map(t =>
+      s"$t: ${PipelineStreams.probeStamp(spark, t)}").mkString(", "))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val docs = graft.sources.Tables.load(spark, sf01, "documents")
+      .filter(col("doc_id") < 5).select("doc_id", "lang", "text").collect()
+      .map(r => StreamDoc(r.getLong(0), r.getString(1), r.getString(2),
+        new java.sql.Timestamp(0L)))
+    // the descriptions of one writer batch's jobs, and the sink's own
+    def runBatch(table: String): (Seq[String], String) = {
+      seen.clear()
+      val input = MemoryStream[StreamDoc](spark)
+      var sinkDesc = ""
+      val q = PipelineStreams.ngramNearDupWriter(spark, input.toDF(), table) {
+          (df, _) =>
+            sinkDesc = spark.sparkContext.getLocalProperty("spark.job.description")
+            df.collect(): Unit
+        }
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory(s"pf_$table").toString)
+        .start()
+      try {
+        input.addData(docs.toIndexedSeq: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job of the batch has been
+      spark.sparkContext.setJobDescription("pf sentinel")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains("pf sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("pf sentinel"))
+      (scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq,
+        sinkDesc)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (oneJobs, oneSink) = runBatch(onePage)
+      val (manyJobs, manySink) = runBatch(manyPages)
+      val collect = "gate key collect: pkey (pushed)"
+      assert(oneSink === "ngram gate: sink write (plain)")
+      assert(!oneJobs.contains(collect), oneJobs)
+      assert(manySink === "ngram gate: sink write (pushed)")
+      assert(manyJobs.contains(collect), manyJobs)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      Seq(onePage, manyPages).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("pushed writer restores the session IN-pushdown threshold after " +
       "the batch drains (no net session-conf change)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.PipelineStreams.StreamDoc
     import spark.implicits._
     val table = "pf_restore"
-    Dedup.writeNgramIndexTable(spark, sf, table, 8)
+    Testing.withSmallPages(Dedup.writeNgramIndexTable(spark, sf, table, 8))
     val key = "spark.sql.parquet.pushdown.inFilterThreshold"
     // pin a known prior (the direct-API tests elsewhere may have left it
     // raised — the scope must restore to WHATEVER was set before) and
@@ -172,13 +274,13 @@ class ProbeFormSpec extends AnyFunSuite {
     Dedup.writeNgramIndexTable(spark, sf, table, 8)
     val mpb = "spark.sql.files.maxPartitionBytes"
     try {
-      val base = Dedup.measureKeyRuns(spark, table, "pkey")
+      val base = Dedup.measureKeyLayout(spark, table, "pkey")._1
       // force every index file to split into many scan partitions: the
       // old per-split fold counted each split as a file and restarted a
       // run at each boundary, deflating the statistic toward 1 and
       // stamping borderline layouts 'pushed'
       spark.conf.set(mpb, "16384")
-      val underSplits = Dedup.measureKeyRuns(spark, table, "pkey")
+      val underSplits = Dedup.measureKeyLayout(spark, table, "pkey")._1
       assert(underSplits === base,
         s"runs/file must not depend on scan splitting: $underSplits vs $base")
       // the internal pin restores the session's own setting
@@ -247,7 +349,8 @@ class ProbeFormSpec extends AnyFunSuite {
         q.processAllAvailable()
       } finally q.stop()
       // before the fix: scope-out restored the captured prior ("10"),
-      // silently degrading the direct plan's pushed IN to a range scan;
+      // silently degrading the direct plan's pushed IN to parquet's
+      // min/max-only FilterApi.in;
       // now the scope's recorded prior is rewritten by the direct raise
       assert(spark.conf.get(key).toInt > PipelineStreams.PushChunk,
         "direct raise was clobbered by the enclosing scope's restore")

@@ -450,7 +450,11 @@ class StreamGateScaleSpec extends AnyFunSuite {
       "pushed into the scan, no base-side Exchange") {
     import graft.operators.Dedup
     val table = "gs_ngram_pushed_index"
-    Dedup.writeNgramIndexTable(spark, smallSf, table, nBuckets = 8)
+    // one-row pages in one bucket (a few files): ~10k key pages per
+    // file, the index a ~3.6k-key batch can prune (see
+    // Testing.withPageRows); at one page per file it would fall back
+    Testing.withPageRows(1)(
+      Dedup.writeNgramIndexTable(spark, smallSf, table, nBuckets = 1))
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       val probe = graft.sources.Tables.load(spark, smallSf, "documents")
@@ -467,7 +471,8 @@ class StreamGateScaleSpec extends AnyFunSuite {
       assert(rows(pushed).nonEmpty)
       // the scan must carry the batch's key set as a parquet-pushed IN —
       // THE point of the pushed form: per-batch reads are the pages the
-      // keys touch, not a sorted-stream merge of the whole base. (After
+      // keys touch (on an index with many more key pages per file than
+      // keys, as here), not a sorted-stream merge of the whole base. (After
       // pruning, BOTH join sides are batch-sized, so which side
       // exchanges or broadcasts is immaterial — the corpus-sized base
       // never enters the join at all. The sibling bucketed tests' no-
@@ -479,8 +484,9 @@ class StreamGateScaleSpec extends AnyFunSuite {
         plan.take(2000))
       // a key set larger than the parquet IN threshold must STILL push
       // exactly (the helper lifts the session threshold to PushChunk):
-      // the default (10) would silently fall back to a min/max range
-      // that covers ~everything for hashed keys.
+      // the default (10) would silently fall back to parquet's
+      // FilterApi.in, whose page checks use only the set's min and max —
+      // a range that covers ~everything for hashed keys.
       assert(spark.conf.get(
         "spark.sql.parquet.pushdown.inFilterThreshold").toInt >
         PipelineStreams.PushChunk,
@@ -501,7 +507,10 @@ class StreamGateScaleSpec extends AnyFunSuite {
       "keys pushed into the scan") {
     import graft.operators.Dedup
     val table = "gs_minhash_pushed_index"
-    Dedup.writeMinhashIndexTable(spark, smallSf, table, nBuckets = 8)
+    // ~450 docs x 4 bands: one-row pages in one bucket give each file
+    // the key pages to prune that many keys
+    Testing.withPageRows(1)(
+      Dedup.writeMinhashIndexTable(spark, smallSf, table, nBuckets = 1))
     try {
       val probe = graft.sources.Tables.load(spark, smallSf, "documents")
         .select(col("doc_id"), col("text"))
@@ -560,6 +569,79 @@ class StreamGateScaleSpec extends AnyFunSuite {
     } finally spark.conf.unset(PipelineStreams.PushChunkConf)
   }
 
+  test("pushed ngram gate on a one-page-per-file index: a 40-doc batch " +
+      "plans no pushed In, same rows as on a many-page index") {
+    import graft.operators.Dedup
+    val onePage = "gs_ngram_one_page_index"
+    val manyPages = "gs_ngram_many_pages_index"
+    Dedup.writeNgramIndexTable(spark, smallSf, onePage, nBuckets = 8)
+    Testing.withPageRows(1)(
+      Dedup.writeNgramIndexTable(spark, smallSf, manyPages, nBuckets = 8))
+    try {
+      val onePageStamp = PipelineStreams.probeStamp(spark, onePage)
+      info(s"stamps: one-page index $onePageStamp, " +
+        s"many-page index ${PipelineStreams.probeStamp(spark, manyPages)}")
+      val files = spark.table(onePage).inputFiles.length
+      assert(onePageStamp.keyFiles === files)
+      assert(onePageStamp.keyPages === files)
+      // 40 docs x 8 bands: far more keys than the one-page index has
+      // pages per file, fewer than half the many-page index's
+      val probe = graft.sources.Tables.load(spark, smallSf, "documents")
+        .select(col("doc_id"), col("lang"), col("text"))
+        .filter(col("doc_id") % 11 === 0 && col("doc_id") < 440)
+      assert(probe.count() === 40)
+      def run(table: String) = {
+        val df = PipelineStreams.ngramNearDupBatchPushed(spark, probe, table)
+        (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getLong(3))).toSet, df.queryExecution.executedPlan.toString)
+      }
+      val (oneRows, onePlan) = run(onePage)
+      val (manyRows, manyPlan) = run(manyPages)
+      assert(!onePlan.contains("PushedFilters: [In(pkey"), onePlan.take(2000))
+      assert(manyPlan.contains("PushedFilters: [In(pkey"), manyPlan.take(2000))
+      assert(oneRows === manyRows)
+      assert(oneRows.nonEmpty)
+    } finally Seq(onePage, manyPages)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("pushed key cap: |keys| = key pages per file / 2 pushes, one key " +
+      "more falls back") {
+    import graft.operators.Dedup
+    import PipelineStreams.ProbeStamp
+    val table = "gs_ngram_cap_index"
+    Testing.withSmallPages(Dedup.writeNgramIndexTable(spark,
+      smallSf.replace("sf0.1", "sf0.01"), table, nBuckets = 4))
+    try {
+      // the stamp counts the key column's pages over the index files:
+      // two-row pages, so ceil(rows / 2) per file
+      val stamp = PipelineStreams.probeStamp(spark, table)
+      val perFile = spark.table(table).groupBy(input_file_name()).count()
+        .collect().map(_.getLong(1))
+      assert(stamp.keyPages === perFile.map(n => (n + 1) / 2).sum)
+      assert(stamp.keyFiles === perFile.length)
+      val cap = stamp.pushCap(Dedup.NgramNumBands)
+      assert(cap === stamp.keyPages / (2 * stamp.keyFiles))
+      val keys = spark.table(table).select("pkey").distinct()
+        .orderBy("pkey").limit(cap + 1).collect().map(_.getString(0))
+      assert(keys.length === cap + 1)
+      def form(n: Int): String = PipelineStreams.prunedBase(spark,
+        spark.table(table), "pkey", keys.take(n).toSeq.toDF("pkey"), cap)._2
+      assert(form(cap) === "pushed")
+      assert(form(cap + 1) === "plain")
+      // the cap is per file; MaxPushedKeys still bounds it; an index
+      // that cannot take one document's keys never pushes (and skips
+      // the collect)
+      assert(ProbeStamp("pushed", 1L << 40, 1).pushCap(8) ===
+        PipelineStreams.MaxPushedKeys)
+      assert(ProbeStamp("pushed", 16, 1).pushCap(8) === 8)
+      assert(ProbeStamp("pushed", 15, 1).pushCap(8) === 0)
+      assert(ProbeStamp("pushed", 64, 4).pushCap(8) === 8)
+      assert(ProbeStamp("pushed", 64, 5).pushCap(8) === 0)
+      assert(ProbeStamp("plain", 1L << 40, 1).autoCap(8) === 0)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
   // No pushed simhash test: the pushed form was built, measured 20x
   // WORSE than the plain bucketed probe at x100 (combo_key's 20-run
   // interleaved sort defeats page pruning — 91 MB/30.7 s vs 2 MB/1.5 s
@@ -569,8 +651,23 @@ class StreamGateScaleSpec extends AnyFunSuite {
       "the plain bucketed join, same answers") {
     import graft.operators.Dedup
     val table = "gs_ngram_fallback_index"
-    Dedup.writeNgramIndexTable(spark, smallSf, table, nBuckets = 8)
+    // the builder's layout (bucketed and sorted on (band_j, pkey)) in
+    // ONE file of one-row pages: ~40k key pages in the file lift the
+    // key-page cap to its MaxPushedKeys ceiling, so the key collect runs
+    // and the ceiling, not the index's page count, is what sends the
+    // batch to the plain join (at the default one page per file the cap
+    // is 0 and no key collect runs)
+    Testing.withPageRows(1) {
+      Dedup.ngramGateIndex(spark, smallSf).coalesce(1).write
+        .mode("overwrite").bucketBy(1, "band_j", "pkey")
+        .sortBy("band_j", "pkey").saveAsTable(table)
+    }
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES" +
+      s"('graft.banding' = '${Dedup.NgramBanding}')")
+    Dedup.stampProbeStats(spark, table, "pkey")
     try {
+      assert(PipelineStreams.probeStamp(spark, table)
+        .pushCap(Dedup.NgramNumBands) === PipelineStreams.MaxPushedKeys)
       // the WHOLE corpus as one "batch": 5k docs x 8 bands ≈ 40k keys,
       // over MaxPushedKeys (16384) — a backfill, not a stream trigger
       val probe = graft.sources.Tables.load(spark, smallSf, "documents")

@@ -5,7 +5,7 @@
 The Scala side stamps `graft.key_runs` (average maximal non-descending
 runs of the index's pushed key per parquet FILE, in stored row order)
 into each gate index's TBLPROPERTIES at build time, and the streaming
-writers route pushed-vs-plain on it (Dedup.measureKeyRuns /
+writers route pushed-vs-plain on it (Dedup.measureKeyLayout /
 stampProbeStats). This script recomputes the same statistic with
 pyarrow only -- no Spark, no repo Scala code -- so the stamp's
 scale-invariance claim ("runs/file is a layout property, byte-exact at
