@@ -98,20 +98,8 @@ object BenchGateCold {
           val t = s"gate_${g}_$label"
           val t0 = System.nanoTime()
           write(sfDir, t)
-          // emit the measured probe-form stamp (where the writer set
-          // one) so tools/probe_runs.py's pyarrow recomputation lands
-          // byte-adjacent to the Scala value in the same JSONL (r15
-          // verdict #5 — the external check is one command now)
-          val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-            .map(r => r.getString(0) -> r.getString(1)).toMap
-          val stamp = props.get("graft.key_runs").fold("") { kr =>
-            s""","key_runs":$kr,"probe_form":"${props("graft.probe_form")}"""" +
-              s""","probe_key":"${props("graft.probe_key")}"""" +
-              s""","key_pages":${props("graft.key_pages")}""" +
-              s""","key_files":${props("graft.key_files")}"""
-          }
           println(s"""{"built":"$t","sec":${(System.nanoTime() - t0) / 1e9},""" +
-            s""""bytes":${tableBytes(spark, t)}$stamp}""")
+            s""""bytes":${tableBytes(spark, t)}}""")
         }
 
       case "probe" =>
@@ -170,49 +158,6 @@ object BenchGateCold {
                 s""""batch${i + 1}_sec":$s,"batch${i + 1}_bytes":$b"""
               }.mkString(",") + "}")
           } finally { stop(); spark.catalog.dropTempView(qname): Unit }
-        }
-
-        // the PUSHED writers (round-13 verdict #2, generalized to the
-        // gate family in r14), against the SAME index tables as the plain
-        // rows above. A batch pushes its band keys into the bucketed scan
-        // only when each index file has two key pages per key
-        // (PipelineStreams.ProbeStamp.pushCap; `key_pages` / `key_files`
-        // in the build line), else it takes the plain join. So each batch reports the
-        // form it took, read from the sink write's job description: only
-        // a `pushed` batch isolates the batch-key pushdown.
-        val SinkForm = """.* gate: sink write \((pushed|plain)\)""".r
-        type PushedWriter =
-          (DataFrame, String) => ((DataFrame, Long) => Unit) =>
-            org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
-        val pushedGates: Seq[(String, PushedWriter)] = Seq(
-          ("ngram", (df, t) => PipelineStreams
-            .ngramNearDupPushedWriter(spark, df, t)),
-          ("minhash", (df, t) => PipelineStreams
-            .minhashNearDupPushedWriter(spark, df, t)))
-        pushedGates.foreach { case (g, mkWriter) =>
-          val table = s"gate_${g}_$label"
-          val in = MemoryStream[StreamDoc](spark)
-          val forms = new java.util.concurrent.ConcurrentLinkedQueue[String]
-          val q = mkWriter(in.toDF(), table)((d, _) => {
-            forms.add(spark.sparkContext
-              .getLocalProperty("spark.job.description") match {
-              case SinkForm(f) => f
-              case _ => "unknown"
-            })
-            d.collect(): Unit
-          }).start()
-          try {
-            val rows = (1 to nBatches).map { _ =>
-              val m = measured { in.addData(batchDocs); q.processAllAvailable() }
-              (m, Option(forms.poll()).getOrElse("none"))
-            }
-            val idx = tableBytes(spark, table)
-            println(s"""{"gate":"${g}_pushed","label":"$label","index_bytes":$idx,""" +
-              rows.zipWithIndex.map { case (((s, b), form), i) =>
-                s""""batch${i + 1}_sec":$s,"batch${i + 1}_bytes":$b,""" +
-                  s""""batch${i + 1}_form":"$form""""
-              }.mkString(",") + "}")
-          } finally q.stop()
         }
 
       case other => sys.error(s"unknown mode '$other' (build|probe)")

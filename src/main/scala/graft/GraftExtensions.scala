@@ -189,8 +189,10 @@ object GraftViews {
   def register(spark: SparkSession, sfDir: String,
                only: Set[String] = Set.empty): Unit = {
     GraftFunctions.register(spark)
+    val fs = new org.apache.hadoop.fs.Path(sfDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     TableNames
-      .filter(t => new java.io.File(s"$sfDir/$t.parquet").exists())
+      .filter(t => fs.exists(new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet")))
       .foreach(t => graft.sources.Tables.load(spark, sfDir, t)
         .createOrReplaceTempView(t))
     // per-query isolation: an sfDir missing a table family (the

@@ -170,29 +170,25 @@ object Dedup {
   private val pairsCache =
     scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
 
-  /** Cache keys embed a size+mtime fingerprint of the backing table file,
-    * so REGENERATED testdata at the same path invalidates instead of
-    * silently serving stale pairs (same scheme as
-    * LogTable.ensureMaterialized). */
-  private[graft] def cacheKeyFor(sfDir: String, variant: String,
-                                 table: String): String = {
-    val src = new java.io.File(s"$sfDir/$table.parquet")
-    val parts: Seq[java.io.File] =
-      if (src.isDirectory) src.listFiles().toSeq.sortBy(_.getName) else Seq(src)
-    val fp = java.lang.Long.toHexString(
-      parts.foldLeft(17L)((h, f) => ((h * 31 + f.length) * 31) + f.lastModified))
-    s"$sfDir#$variant#$fp"
-  }
-
-  private[graft] def cacheKey(sfDir: String, variant: String): String =
-    cacheKeyFor(sfDir, variant, "documents")
+  /** Cache keys embed the backing table's input fingerprint
+    * ([[graft.sources.Tables.fingerprint]]: each file's length and mtime,
+    * statted through the path's Hadoop FS), so REGENERATED testdata at
+    * the same path invalidates instead of silently serving stale pairs. */
+  private[graft] def cacheKeyFor(spark: SparkSession, sfDir: String,
+                                 variant: String, table: String): String =
+    s"$sfDir#$variant#" +
+      graft.sources.Tables.fingerprint(spark, s"$sfDir/$table.parquet")
 
   /** Compressed on-disk bytes of a backing table — the cheap (fs metadata
     * only) input-size measure the data-proportional shuffle sizing keys
-    * off. */
-  private[graft] def inputBytes(sfDir: String, table: String): Long = {
-    val src = new java.io.File(s"$sfDir/$table.parquet")
-    if (src.isDirectory) src.listFiles().map(_.length).sum else src.length
+    * off. Summed through the path's Hadoop FS, so a `file:`, s3a or hdfs
+    * table sizes like a bare local path. A missing table is 0 bytes. */
+  private[graft] def inputBytes(spark: SparkSession, sfDir: String,
+                                table: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try fs.getContentSummary(p).getLength
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   /** Source-compressed bytes per shuffle partition for the big artifact
@@ -220,7 +216,7 @@ object Dedup {
       spark: SparkSession, sfDir: String,
       table: String = "documents"): Int = {
     val floor = spark.sessionState.conf.numShufflePartitions
-    val sized = inputBytes(sfDir, table) / BuildBytesPerPartition + 1
+    val sized = inputBytes(spark, sfDir, table) / BuildBytesPerPartition + 1
     math.max(floor, math.min(4096L, sized).toInt)
   }
 
@@ -257,7 +253,7 @@ object Dedup {
       spark: SparkSession, sfDir: String, variant: String,
       table: String = "documents")(
       build: => DataFrame): DataFrame = cache.synchronized {
-    val key = cacheKeyFor(sfDir, variant, table)
+    val key = cacheKeyFor(spark, sfDir, variant, table)
     val prefix = s"$sfDir#$variant#"
     cache.keys
       .filter(k => (k._1 eq spark) && k._2.startsWith(prefix) && k._2 != key)
@@ -319,7 +315,7 @@ object Dedup {
   private[graft] def wordSetBase(spark: SparkSession, sfDir: String): Unit = {
     def cold(variant: String): Boolean = pairsCache.synchronized {
       !pairsCache.contains(
-        (spark, cacheKeyFor(sfDir, variant, "documents")))
+        (spark, cacheKeyFor(spark, sfDir, variant, "documents")))
     }
     if (cold("wsall")) wordSetAll(spark, sfDir).count(): Unit
     if (cold("wsreps")) wordSetReps(spark, sfDir).count(): Unit
@@ -1621,222 +1617,7 @@ object Dedup {
       .saveAsTable(table)
     spark.sql(
       s"ALTER TABLE $table SET TBLPROPERTIES('graft.banding' = '$banding')")
-    // r14 verdict #4: measure (don't hand-pick) whether batch-key
-    // pushdown pays on THIS index's layout, and stamp the verdict next
-    // to the banding descriptor so the gate writers can select the
-    // probe form from data. keys.last is the pushed column (the sortBy
-    // minor key the pushed IN constrains).
-    stampProbeStats(spark, table, keys.last)
   }
-
-  /** Max acceptable runs per file ([[measureKeyLayout]]) for the pushed probe form.
-    * Calibrated against the r14 single-run gate table's two regimes:
-    * the layouts where pushdown WON have run counts bounded by their
-    * (small) leading-column cardinality — minhash band_key = 4 band_j
-    * runs, ngram pkey = 8 band_j runs — while the layout where it lost
-    * 20× in time and 45× in bytes has 20 (simhash combo_key under 20
-    * combo_j runs), and a layout with no key ordering at all measures
-    * ~rows/2. 12 is the midpoint of the measured good (≤8) and bad
-    * (≥20) regimes. */
-  private[graft] val KeyRunsMax = 12.0
-
-  /** Measure + record the index key's page selectivity (r14 verdict #4,
-    * making the round-14 item-10 decision rule — "pushdown pays iff the
-    * sortBy key is page-selective for probe keys" — executable instead
-    * of hand-applied per family). Returns (runs, form) and stamps both
-    * into TBLPROPERTIES as `graft.key_runs` / `graft.probe_form`, plus
-    * `graft.probe_key`, `graft.key_pages` (the key column's page count
-    * over all index files) and `graft.key_files` (the file count) — the
-    * pages a pushed key set can skip, read per batch by the gate
-    * writers. One extra scan of the (small, artifact) index at build
-    * time. */
-  private[graft] def stampProbeStats(spark: SparkSession, table: String,
-                                     keyCol: String): (Double, String) = {
-    val (runs, pages, files) = measureKeyLayout(spark, table, keyCol)
-    val form = if (runs <= KeyRunsMax) "pushed" else "plain"
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" +
-      s"'graft.probe_key' = '$keyCol', 'graft.key_runs' = '$runs', " +
-      s"'graft.key_pages' = '$pages', 'graft.key_files' = '$files', " +
-      s"'graft.probe_form' = '$form')")
-    (runs, form)
-  }
-
-  /** Key types [[measureKeyLayout]] can order the way parquet's page
-    * stats do. Anything else FAILS the stamping build loudly (r15
-    * verdict #6 / advice): the old `case _ => false` measured an
-    * unordered struct/array key as "no descent evidence" → runs ≈
-    * files → stamped `pushed` for a layout parquet cannot page-prune
-    * at all — the exact simhash-style degradation the stamp exists to
-    * prevent, silently re-opened for any future index keyed on a
-    * composite type. */
-  private def runsComparable(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType | LongType | IntegerType | ShortType | ByteType |
-           DoubleType | FloatType | BinaryType | DateType | TimestampType |
-           TimestampNTZType => true
-      case _: DecimalType => true
-      case _ => false
-    }
-  }
-
-  /** Serializes [[measureKeyLayout]] invocations. The original reason (two
-    * builds interleaving a session-conf save/restore) is gone — the pin
-    * now lives in a discarded session clone (r16 advice #5) — but the
-    * measurement is a full index scan, and two index builds racing their
-    * stamping scans on one executor pool just thrash each other. */
-  private val measureLock = new Object
-
-  /** Page-selectivity statistic of `keyCol` under the table's PHYSICAL
-    * layout: the average number of maximal non-descending runs of the
-    * key per file, in stored row order (parquet's own orderings —
-    * signed numeric / lexicographic). This is the layout property that
-    * PREDICTS pushed-IN page pruning at any scale: a probe key can
-    * match at most min(runs, pages-per-file) of a file's column-index
-    * pages, so a run-count-bounded layout (key sorted under a
-    * small-cardinality leading column) stays page-selective as the
-    * index grows 100×, while a layout whose runs rival the page count
-    * degrades to "page min/max matches everything" — the measured
-    * simhash failure (91 MB / 30.7 s per batch vs plain 2 MB / 1.5 s).
-    * A direct simulated-read fraction was tried first and rejected: at
-    * build scales where the whole file is a handful of pages it
-    * saturates for EVERY layout (good and degenerate both measured ~41
-    * matched windows at sf0.1) and so cannot gate anything.
-    *
-    * Cost: one pass over the (artifact-sized) index per build; the run
-    * counter is a per-partition fold tracking file boundaries via
-    * `input_file_name`, so concatenated files in one scan partition
-    * don't charge a spurious descent.
-    *
-    * Split discipline (r15 advice): the scan runs with
-    * `spark.sql.files.maxPartitionBytes` pinned high enough that no
-    * index file is SPLIT across scan partitions — a split file would
-    * count once per split and restart a run at each split boundary,
-    * deflating runs/file exactly on the borderline layouts the gate
-    * exists to catch (true runs ~40 split 4 ways measures ~11 <
-    * KeyRunsMax). The pin lives in a CLONED session
-    * (`spark.newSession()` — shared catalog, so the saveAsTable'd index
-    * is visible; ISOLATED SQL conf, so the 8 TiB pin can never leak
-    * into concurrent queries planned in the caller's session during the
-    * measurement window — r16 advice #5). The denominator additionally
-    * counts DISTINCT file names (merged across partitions), not
-    * split-first-rows, as a belt-and-braces invariant.
-    *
-    * Returns (runs per file, key pages, files): the key pages are the
-    * key column's page count summed over the index files, taken in the
-    * same pass — each scan task reads the parquet offset index of the
-    * files it just streamed (one footer and one offset-index read per
-    * file, on the executors, so the count adds no serial per-file loop
-    * to the build). A row group written without an offset index counts
-    * as one page — its statistics are then the finest unit a pushed
-    * filter can skip. */
-  private[graft] def measureKeyLayout(spark: SparkSession, table: String,
-                                      keyCol: String): (Double, Long, Int) = {
-    val keyType = spark.table(table).schema(keyCol).dataType
-    if (!runsComparable(keyType))
-      throw new IllegalArgumentException(
-        s"measureKeyLayout: key column '$keyCol' of table '$table' has " +
-          s"unordered type ${keyType.simpleString} — parquet page stats " +
-          "cannot prune this type, so a runs/file measurement would be " +
-          "vacuously optimistic and the index must not stamp a probe " +
-          "form from it; key the index on a scalar column (string, " +
-          "integral, float/double, decimal, binary, date, timestamp) " +
-          "or stamp 'plain' explicitly")
-    val MPB = "spark.sql.files.maxPartitionBytes"
-    val (runs, filePages) = measureLock.synchronized {
-      // isolated-conf clone: the pin affects only this measurement's
-      // plan, never the shared session (r16 advice #5); nothing to
-      // restore afterwards — the clone is discarded
-      val measureSession = spark.newSession()
-      // no file splits below 8 TiB
-      measureSession.conf.set(MPB, (8L << 40).toString)
-      // broadcast: shipped once per executor, not in every task closure
-      val hadoopConf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          measureSession.sessionState.newHadoopConf()))
-      val df = measureSession.table(table)
-        .select(col(keyCol).as("k"), input_file_name().as("f"))
-      try df.rdd.mapPartitions { it =>
-          var runs = 0L
-          val files = scala.collection.mutable.HashSet.empty[String]
-          var prevFile: String = null
-          var prevKey: Any = null
-          def descends(a: Any, b: Any): Boolean = (a, b) match {
-            case (null, _) | (_, null) => false
-            case (x: String, y: String) => x.compareTo(y) > 0
-            case (x: Long, y: Long) => x > y
-            case (x: Int, y: Int) => x > y
-            case (x: Double, y: Double) => x > y
-            case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-              x.compareTo(y) > 0
-            case (x: Array[Byte], y: Array[Byte]) =>
-              // unsigned lexicographic — parquet's binary stats ordering
-              val n = math.min(x.length, y.length)
-              var i = 0; var r = 0
-              while (i < n && r == 0) { r = (x(i) & 0xff) - (y(i) & 0xff); i += 1 }
-              (if (r != 0) r else x.length - y.length) > 0
-            case (x: java.lang.Comparable[_], y) if x.getClass == y.getClass =>
-              // the remaining whitelisted scalars (float/short/byte,
-              // date/timestamp in either java.sql or java.time form,
-              // decimal) — all Comparable with parquet's own ordering
-              x.asInstanceOf[java.lang.Comparable[Any]].compareTo(y) > 0
-            case _ => throw new IllegalStateException(
-              s"measureKeyLayout: unorderable key value of ${a.getClass}")
-          }
-          it.foreach { r =>
-            val k = r.get(0)
-            val f = r.getString(1)
-            if (f != prevFile) { files += f; runs += 1; prevFile = f }
-            else if (descends(prevKey, k)) runs += 1
-            prevKey = k
-          }
-          val pages = files.iterator
-            .map(f => f -> keyPagesIn(hadoopConf.value.value, f, keyCol))
-            .toMap
-          Iterator.single((runs, pages))
-        }.fold((0L, Map.empty[String, Long])) {
-          case ((r1, p1), (r2, p2)) => (r1 + r2, p1 ++ p2)
-        }
-      finally hadoopConf.destroy()
-    }
-    (if (filePages.isEmpty) 1.0 else runs.toDouble / filePages.size,
-      filePages.values.sum, filePages.size)
-  }
-
-  /** Pages of column `keyCol` in one parquet file, from its offset
-    * indexes (see [[measureKeyLayout]]). */
-  private def keyPagesIn(conf: org.apache.hadoop.conf.Configuration,
-                         file: String, keyCol: String): Long = {
-    import scala.jdk.CollectionConverters._
-    // explicit read options: open(file) alone copies the whole Hadoop
-    // conf per file, ~7 ms each on a 4-core host, where the footer and
-    // offset-index read itself takes ~0.25 ms
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(new java.net.URI(file)), conf),
-      org.apache.parquet.HadoopReadOptions.builder(conf).build())
-    try reader.getRowGroups.asScala.iterator.map { rg =>
-        val chunk = rg.getColumns.asScala
-          .find(_.getPath.toDotString == keyCol).getOrElse(
-            throw new IllegalStateException(
-              s"measureKeyLayout: no column '$keyCol' in $file"))
-        Option(reader.readOffsetIndex(chunk)).fold(1L)(_.getPageCount.toLong)
-      }.sum
-    finally reader.close()
-  }
-
-  /** A table's properties (one catalog read). */
-  private[graft] def tableProps(spark: SparkSession,
-                                table: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-
-  /** The measured probe form stamped at index build time, if present
-    * (indexes written before r15 lack it — callers decide whether to
-    * demand a rebuild). */
-  private[graft] def gateProbeForm(spark: SparkSession,
-                                   table: String): Option[String] =
-    tableProps(spark, table).get("graft.probe_form")
 
   /** The banding descriptor a gate index table was written with. */
   private[graft] def gateIndexBanding(spark: SparkSession,

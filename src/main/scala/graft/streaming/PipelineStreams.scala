@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout,
+  OutputMode}
 
 import graft.operators.{Curation, TextAnalysis}
 
@@ -346,24 +347,12 @@ object PipelineStreams {
   /** The shared SimHash probe: fingerprint + block-key the incoming
     * docs, equi-join the base index, Hamming-verify, roll up per doc.
     * One definition for the in-memory and bucketed-table variants. */
-  private def simhashProbe(docs: DataFrame, base: DataFrame): DataFrame =
-    simhashVerifyRollup(simhashBandFrame(docs), base)
-
-  /** Probe-side fingerprint+block stage of [[simhashProbe]] — split out
-    * so the pushed form can derive the batch's key set from the same
-    * definition the join uses. */
-  private def simhashBandFrame(docs: DataFrame): DataFrame = {
+  private def simhashProbe(docs: DataFrame, base: DataFrame): DataFrame = {
     import graft.operators.Dedup
     Dedup.simhashBlockKeys(Dedup.withSimhash64(docs))
       .select(col("doc_id"), col("sh_lo"), col("sh_hi"),
         col("combo_j"), col("combo_key"))
-  }
-
-  /** Verify+rollup stage of [[simhashProbe]]. */
-  private def simhashVerifyRollup(banded: DataFrame,
-                                  base: DataFrame): DataFrame = {
-    import graft.operators.Dedup
-    banded.join(base, Seq("combo_j", "combo_key"))
+      .join(base, Seq("combo_j", "combo_key"))
       .filter(Dedup.hamming64(col("sh_lo"), col("sh_hi"),
         col("base_lo"), col("base_hi")) <= Dedup.SimHammingMax)
       .groupBy("doc_id")
@@ -382,16 +371,6 @@ object PipelineStreams {
     requireBanding(spark, indexTable, graft.operators.Dedup.SimhashBanding)
     simhashProbe(docs, spark.table(indexTable))
   }
-
-  // NO pushed form for the SimHash gate — measured counterproductive
-  // (r14 cold harness): combo_key is a 33-bit block-triple value
-  // INTERLEAVED across 20 combo_j runs per sorted bucket file, so a
-  // pushed IN's page min/max checks match nearly every page (20 runs ×
-  // wide value spans) and the probe read 91 MB / 30.7 s steady per batch
-  // at x100 vs the plain bucketed join's 2 MB / 1.5 s. The plain probe
-  // is already scale-flat there; pushdown pays only where the sorted key
-  // is selective at page granularity (ngram's composite pkey, minhash's
-  // band_key strings).
 
   /** Fail fast when an index table was banded under different constants
     * than this probe build — a silent mismatch would band probes into
@@ -431,13 +410,7 @@ object PipelineStreams {
     * docs, equi-join the base rep index, size-ratio prune,
     * Jaccard-verify, roll up per doc. One definition for the in-memory
     * and bucketed-table variants. */
-  private def minhashProbe(docs: DataFrame, base: DataFrame): DataFrame =
-    minhashVerifyRollup(minhashBandFrame(docs), base)
-
-  /** Probe-side banding stage of [[minhashProbe]] — split out so the
-    * pushed form can derive the micro-batch's key set from the same
-    * definition the join uses (the [[ngramBandFrame]] pattern). */
-  private def minhashBandFrame(docs: DataFrame): DataFrame = {
+  private def minhashProbe(docs: DataFrame, base: DataFrame): DataFrame = {
     import graft.operators.Dedup
     docs.select(col("doc_id"),
         array_distinct(TextAnalysis.tokens(col("text"))).as("ws"))
@@ -446,13 +419,7 @@ object PipelineStreams {
       .filter(col("nw") >= Dedup.MinWords)
       .select(col("doc_id"), col("nw"), col("hws"))
       .transform(Dedup.bandsOf(_))
-  }
-
-  /** Verify+rollup stage of [[minhashProbe]]. */
-  private def minhashVerifyRollup(banded: DataFrame,
-                                  base: DataFrame): DataFrame = {
-    import graft.operators.Dedup
-    banded.join(base, Seq("band_j", "band_key"))
+      .join(base, Seq("band_j", "band_key"))
       .filter(least(col("nw"), col("base_nw")) * 10 >=
         greatest(col("nw"), col("base_nw")) * 9)
       .withColumn("jacc", round(graft.functions.TextHashes.jaccard_long(
@@ -473,148 +440,36 @@ object PipelineStreams {
     minhashProbe(docs, spark.table(indexTable))
   }
 
-  /** [[minhashNearDupStreamIndexed]] with BATCH-KEY PUSHDOWN — the
-    * [[ngramNearDupBatchPushed]] mechanism on the word-set gate: the
-    * micro-batch's distinct band keys constrain the bucketed scan (the
-    * sortBy'd band_key column) before the join, when the index has the
-    * key pages to skip ([[ProbeStamp.pushCap]]). Same per-batch flag
-    * contract; answers spec-pinned against the plain bucketed probe. */
-  def minhashNearDupBatchPushed(spark: SparkSession, batch: DataFrame,
-                                indexTable: String): DataFrame = {
-    requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
-    minhashBatchProbe(spark, batch, spark.table(indexTable),
-      probeStamp(spark, indexTable).pushCap(graft.operators.Dedup.NumBands))._1
-  }
-
-  /** One batch of the word-set probe, pushing its keys under `cap` (see
-    * [[prunedBase]]); returns the flag frame and the form taken. */
-  private def minhashBatchProbe(spark: SparkSession, batch: DataFrame,
-      base: DataFrame, cap: Int): (DataFrame, String) = {
-    val banded = minhashBandFrame(batch)
-    val (scan, form) = prunedBase(spark, base, "band_key", banded, cap)
-    (minhashVerifyRollup(banded, scan), form)
-  }
-
-  /** foreachBatch writer for [[minhashNearDupBatchPushed]] — catalog
-    * resolution, banding check and probe stamp paid once at
-    * construction. */
-  def minhashNearDupPushedWriter(spark: SparkSession, docs: DataFrame,
-      indexTable: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
-    val base = spark.table(indexTable)
-    val cap = probeStamp(spark, indexTable)
-      .pushCap(graft.operators.Dedup.NumBands)
-    docs.writeStream.foreachBatch {
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        gateBatch(spark, "minhash", cap, id, sink)(
-          minhashBatchProbe(spark, b.toDF(), base, cap))
-    }
-  }
-
-  /** [[minhashNearDupPushedWriter]] / plain bucketed probe, SELECTED BY
-    * THE INDEX'S MEASURED LAYOUT (r14 verdict #4): the build-time
-    * `graft.probe_form` stamp ([[graft.operators.Dedup.stampProbeStats]])
-    * decides pushed vs plain, so a future index whose key layout
-    * degrades page pruning cannot silently inherit the pushed path's
-    * simhash failure mode (91 MB / 30.7 s per batch, measured and
-    * removed in r14); the `graft.key_pages` / `graft.key_files` stamps
-    * then cap each batch's pushed key set ([[ProbeStamp.autoCap]]), and
-    * an index too small to skip pages never runs the key collect.
-    * Requires an index built after the stamps existed (rebuild with
-    * [[graft.operators.Dedup.writeMinhashIndexTable]]). */
+  /** foreachBatch form of [[minhashNearDupStreamIndexed]]: catalog
+    * resolution and the banding check are paid once at construction,
+    * and each micro-batch's flag frame goes to `sink` (see
+    * [[gateWriter]]). */
   def minhashNearDupWriter(spark: SparkSession, docs: DataFrame,
       indexTable: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
     val base = spark.table(indexTable)
-    val cap = probeStamp(spark, indexTable)
-      .autoCap(graft.operators.Dedup.NumBands)
-    docs.writeStream.foreachBatch {
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        gateBatch(spark, "minhash", cap, id, sink)(
-          minhashBatchProbe(spark, b.toDF(), base, cap))
+    gateWriter(spark, docs, "minhash", sink)(minhashProbe(_, base))
+  }
+
+  /** Wire a per-batch gate probe as a streaming sink: each micro-batch's
+    * probe frame goes to `sink` under the job description
+    * `<gate> gate: sink write`, so a listener can tell the gate's jobs
+    * apart. Returns the writer — the caller sets checkpoint/trigger and
+    * starts. Note the contract shift vs the stream-static forms: flags
+    * are PER BATCH (each doc decided once, when it arrives), not
+    * cumulative update-mode state — the gate decision is the same, the
+    * counts reset. */
+  private def gateWriter(spark: SparkSession, docs: DataFrame, gate: String,
+      sink: (DataFrame, Long) => Unit)(probe: DataFrame => DataFrame)
+      : DataStreamWriter[Row] =
+    docs.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
+      val sc = spark.sparkContext
+      // restored afterwards: the streaming engine's per-batch description
+      val prior = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"$gate gate: sink write")
+      try sink(probe(b.toDF()), id) finally sc.setJobDescription(prior)
     }
-  }
-
-  /** The build-time probe stamp of a gate index
-    * ([[graft.operators.Dedup.stampProbeStats]]): the measured probe
-    * form, the key column's page count summed over the index files, and
-    * the file count. */
-  private[graft] final case class ProbeStamp(form: String, keyPages: Long,
-                                             keyFiles: Int) {
-    /** Most keys one batch may push into a scan of this index: half its
-      * key pages PER FILE, never above [[MaxPushedKeys]].
-      *
-      * Per file, because every file holds a sorted run of every band
-      * (the index is bucketed on (band_j, key), so a key's band scatters
-      * it over all files, and bucket pruning needs both columns): a key
-      * falls inside one page's [min, max] in nearly every file. Parquet
-      * skips only a page whose [min, max] holds none of the pushed keys,
-      * so a pushed scan reads about keys / (pages per file) of the index,
-      * whatever its total page count. Measured with the composite gate
-      * on 4k- and 40k-row n-gram indexes (64 files, pages of 1 to 64
-      * rows and one page per file, batches of 1–100 docs, 2 cores):
-      * pushed beat plain in every case with keys ≤ 0.51 × pages per file
-      * on the 40k-row index (in 4 or 5 of 5 runs each), tied or lost from
-      * 0.78 up, and on the 4k-row index won only with pages of one row.
-      * The factor 2 keeps to the winning side of that crossover, which
-      * was not located more finely; this rule chose the faster form
-      * (within 5%) at 56 of the 60 points, a cap of half the TOTAL key
-      * pages at 30. No index with default page sizes and enough pages
-      * per file to push has been measured.
-      *
-      * 0 when not even one document's `bands` keys fit: no batch can
-      * push, and the key collect is skipped. */
-    def pushCap(bands: Int): Int = {
-      val cap = math.min(MaxPushedKeys.toLong,
-        keyPages / (2L * math.max(1, keyFiles))).toInt
-      if (cap < bands) 0 else cap
-    }
-    /** [[pushCap]] for the auto writers: 0 unless the key layout also
-      * measured `pushed`. */
-    def autoCap(bands: Int): Int = if (form == "pushed") pushCap(bands) else 0
-  }
-
-  /** The index's [[ProbeStamp]], read once; an index missing any of its
-    * stamps (built before they existed) fails fast with the rebuild hint
-    * instead of silently guessing a form. */
-  private[graft] def probeStamp(spark: SparkSession,
-                                table: String): ProbeStamp = {
-    val props = graft.operators.Dedup.tableProps(spark, table)
-    def stamp(key: String): String = props.getOrElse(key,
-      throw new IllegalArgumentException(
-        s"index table $table has no $key property — rebuild it with the " +
-          "write*IndexTable builders (probe form, key pages and files are " +
-          "measured from the key layout at build time)"))
-    ProbeStamp(stamp("graft.probe_form"), stamp("graft.key_pages").toLong,
-      stamp("graft.key_files").toInt)
-  }
-
-  /** One writer trigger: build the batch's probe frame (which runs the
-    * key collect when it may push), inside the IN-threshold scope when
-    * `cap` allows pushing, and hand it to `sink` under a job
-    * description naming the gate and the form taken — so a listener can
-    * tell the gate's jobs apart. */
-  private def gateBatch(spark: SparkSession, gate: String, cap: Int,
-      id: Long, sink: (DataFrame, Long) => Unit)(
-      probe: => (DataFrame, String)): Unit = {
-    def run(): Unit = {
-      val (frame, form) = probe
-      described(spark, s"$gate gate: sink write ($form)")(sink(frame, id))
-    }
-    if (cap > 0) PushThresholdScope.scoped(spark, configuredChunk(spark))(run())
-    else run()
-  }
-
-  /** Runs `body` under job description `what`, restoring the caller's
-    * (the streaming engine's per-batch description) afterwards. */
-  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(what)
-    try body finally sc.setJobDescription(prior)
-  }
 
   /** Streaming char-3-gram Jaccard near-dup detection against a STATIC
     * base corpus — the ingest-time shape of `ngram_jaccard`, completing
@@ -654,14 +509,7 @@ object PipelineStreams {
     * matches the bucketed index layout exactly — Jaccard-verify, roll
     * up per doc. One definition for the in-memory and bucketed-table
     * variants. */
-  private def ngramProbe(docs: DataFrame, base: DataFrame): DataFrame =
-    ngramVerifyRollup(ngramBandFrame(docs), base)
-
-  /** Probe-side banding stage of [[ngramProbe]]: gram-hash + band the
-    * incoming docs and fold (lang, length) into the probe key. Split out
-    * so the pushed form ([[ngramNearDupBatchPushed]]) can derive the
-    * micro-batch's key set from the same definition the join uses. */
-  private def ngramBandFrame(docs: DataFrame): DataFrame = {
+  private def ngramProbe(docs: DataFrame, base: DataFrame): DataFrame = {
     import graft.operators.Dedup
     docs.select(col("doc_id"), col("lang"),
         TextAnalysis.normText(col("text")).as("ntext"))
@@ -674,14 +522,7 @@ object PipelineStreams {
       .withColumnRenamed("hgs", "stream_hgs")
       .withColumn("pkey", Dedup.ngramProbeKey(
         col("lang"), col("n_chars_norm"), col("band_key")))
-  }
-
-  /** Verify+rollup stage of [[ngramProbe]]: equi-join the banded probe
-    * rows against the base index, Jaccard-verify, roll up per doc. */
-  private def ngramVerifyRollup(banded: DataFrame,
-                                base: DataFrame): DataFrame = {
-    import graft.operators.Dedup
-    banded.join(base, Seq("band_j", "pkey"))
+      .join(base, Seq("band_j", "pkey"))
       .withColumn("jacc", round(graft.functions.TextHashes.jaccard_long(
         col("stream_hgs"), col("base_hgs")), 6))
       .filter(col("jacc") >= Dedup.NgramJaccardThreshold)
@@ -700,311 +541,16 @@ object PipelineStreams {
     ngramProbe(docs, spark.table(indexTable))
   }
 
-  /** Max batch-key count the pushed probes inline into the scan filter,
-    * on any index: above this the pushed form stops paying — planning
-    * and per-scan footer reads grow linearly in [[PushChunk]]-sized
-    * chunks — and the plain bucketed join is the right plan anyway: a
-    * batch that large is a backfill, not a stream trigger. The cap a
-    * batch actually meets is lower on an index with fewer than 2 ×
-    * 16384 key pages per file ([[ProbeStamp.pushCap]]): a pushed scan
-    * reads only the pages the keys touch, and that is less than the
-    * whole index only while the keys are few against each file's
-    * pages. */
-  private[graft] val MaxPushedKeys = 16384
-
-  /** Default keys per pushed IN list.
-    *
-    * The precise In is the whole win: parquet evaluates it as an
-    * or(eq, ...) chain that prunes exactly (measured 2.6-3.4 s steady
-    * vs 5.0-5.4 s for the min/max-range form and 4.3 s for the plain
-    * bucketed join, x100 cold harness). Above Spark's
-    * `inFilterThreshold` the In is pushed as parquet `FilterApi.in`
-    * instead, whose row-group statistics and page checks test only the
-    * key set's overall min and max: on a sorted 4M-key file it read
-    * 2.02M rows where the or-chain read 68k. And depth-bounded
-    * ALTERNATIVE SHAPES are unreachable: a balanced Or-of-equals (or of
-    * degenerate ranges) collapses back to sources.In during optimization
-    * (verified empirically), and non-degenerate range trees push but
-    * do not prune like the chain (measured 4.96 s). So the chain's
-    * recursion depth is governed by CHUNKING alone, and chunk count is
-    * the fixed cost that matters: each chunk scan re-pays the index's
-    * per-scan read (~4.5 MB / ~1 s at the x100 index - the same fixed
-    * cost the plain scan pays once), so a typical 100-doc x 8-band
-    * micro-batch must stay in ONE chunk.
-    *
-    * Depth safety: 1024 is verified on every real gate index at both
-    * measured scales (including a 3.6k-key probe = three 1024-chunks);
-    * parquet's recursive evaluators overflowed ONLY on a toy
-    * short-string dictionary column, NON-deterministically (the same
-    * depth passed on retry - residual thread-stack depth decides).
-    * Deployments probing an index whose key column is short and
-    * dictionary-encoded can lower [[PushChunkConf]] (256 measured safe
-    * there under default 1 MB stacks) at the documented per-scan
-    * fixed-cost multiple; the chunk-edges spec pins the 256 path. */
-  private[graft] val PushChunk = 1024
-
-  /** Session conf overriding [[PushChunk]] (see its scaladoc). */
-  private[graft] val PushChunkConf = "spark.graft.pushdown.chunk"
-
-  /** [[PushChunkConf]] if set (validated: a malformed or non-positive
-    * value fails with an error NAMING the conf, not a bare
-    * NumberFormatException from inside a foreachBatch trigger — r14
-    * advice), else [[PushChunk]]. */
-  private[graft] def configuredChunk(spark: SparkSession): Int =
-    spark.conf.getOption(PushChunkConf) match {
-      case None => PushChunk
-      case Some(s) =>
-        val n =
-          try s.trim.toInt
-          catch {
-            case e: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"$PushChunkConf must be a positive integer, got '$s'", e)
-          }
-        if (n <= 0) throw new IllegalArgumentException(
-          s"$PushChunkConf must be a positive integer, got '$s'")
-        n
-    }
-
-  /** Scopes the session's parquet IN-pushdown threshold to a pushed
-    * probe's batch lifecycle (r14 verdict #5): the foreachBatch writer
-    * OWNS the action, so raising the threshold on entry and restoring
-    * the prior value after the sink returns cannot race lazy plan
-    * compilation the way a restore around mere DataFrame construction
-    * would. Ref-counted per session so two pushed gate streams whose
-    * batches interleave don't restore the threshold under each other
-    * mid-batch (the first scope in records the prior value; the last
-    * scope out restores it). Net effect: zero session-conf change once
-    * all in-flight pushed batches complete. */
-  private object PushThresholdScope {
-    private val Key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    private val states =
-      scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
-    /** Sticky per-session floor set by DIRECT-API raises (r15 advice
-      * #3): a scope-out never restores the threshold below it, so a
-      * direct plan's lazy compilation cannot be degraded to parquet's
-      * min/max-only `FilterApi.in` by an interleaved scoped stream
-      * draining. Sticky by
-      * design — it IS the direct form's documented "leaves it raised"
-      * contract, now honored even in sessions that also run scoped
-      * writers. Weak keys: unlike [[states]] (which self-evicts at
-      * depth 0), floors have no natural removal point, and a strong
-      * map would pin every retired session a direct probe ever
-      * touched for the JVM lifetime. */
-    private val directFloor =
-      new java.util.WeakHashMap[SparkSession, java.lang.Integer]
-    /** Marks the scoped batch body's thread: raises made INSIDE it are
-      * the writer's own (fully executed before scope-out, safe to
-      * restore) and must NOT set the sticky floor — otherwise every
-      * pushed writer batch would permanently pin the session conf and
-      * the restore contract (r14 verdict #5) would be dead code. */
-    private val inScope = new ThreadLocal[java.lang.Boolean] {
-      override def initialValue: java.lang.Boolean = java.lang.Boolean.FALSE
-    }
-    def scoped[T](spark: SparkSession, chunkSize: Int)(body: => T): T = {
-      states.synchronized {
-        val (depth, prior) =
-          states.getOrElse(spark, (0, spark.conf.get(Key)))
-        states(spark) = (depth + 1, prior)
-        if (spark.conf.get(Key).toInt <= chunkSize)
-          spark.conf.set(Key, (chunkSize + 1).toString)
-      }
-      val outer = inScope.get
-      inScope.set(true)
-      try body
-      finally {
-        inScope.set(outer)
-        states.synchronized {
-          val (depth, prior) = states(spark)
-          if (depth <= 1) {
-            states.remove(spark)
-            val target = Option(directFloor.get(spark)) match {
-              case Some(f) if prior.toInt < f.intValue => f.toString
-              case _ => prior
-            }
-            spark.conf.set(Key, target)
-          } else states(spark) = (depth - 1, prior)
-        }
-      }
-    }
-
-    /** Every pushed probe's raise goes through here. Inside a scoped
-      * batch body it is a plain restorable raise; outside one (the
-      * direct `*BatchPushed` API, possibly on a user thread while a
-      * scoped stream's batch is in flight) it additionally records the
-      * sticky [[directFloor]]. Recorded even when the conf is already
-      * high enough — the enclosing scope may be what raised it, and
-      * its scope-out would otherwise restore below the direct plan's
-      * need. */
-    def raise(spark: SparkSession, chunkSize: Int): Unit =
-      states.synchronized {
-        if (spark.conf.get(Key).toInt <= chunkSize)
-          spark.conf.set(Key, (chunkSize + 1).toString)
-        if (!inScope.get)
-          directFloor.put(spark, Int.box(math.max(
-            Option(directFloor.get(spark)).fold(0)(_.intValue),
-            chunkSize + 1))): Unit
-      }
-
-    /** Test/diagnostic hook: forget the session's sticky direct floor
-      * (e.g. between suite cases sharing one session). */
-    def resetDirectFloor(spark: SparkSession): Unit =
-      states.synchronized { directFloor.remove(spark): Unit }
-  }
-
-  /** See [[PushThresholdScope.resetDirectFloor]]. */
-  private[graft] def resetPushFloor(spark: SparkSession): Unit =
-    PushThresholdScope.resetDirectFloor(spark)
-
-  /** Constrain a bucketed gate-index scan to a micro-batch's own key
-    * set: a parquet-pushed IN on the index's sortBy'd key column, so the
-    * per-batch read is the PAGES THE KEYS TOUCH (row-group dictionary +
-    * column-index skipping over the sorted layout), not a sorted-stream
-    * merge of the whole base — the reference's sparse-index floor-seek
-    * discipline (flyq-server/src/core/segment.rs:156-179) applied to the
-    * gate table. That read is less than the whole index only when each
-    * index file has many more key pages than the batch has keys: a page
-    * is skipped only if its [min, max] holds none of them, and a key
-    * lands in a page of nearly every file. With a page per key or fewer,
-    * every page holds one and the pushed scan reads it all, paying for
-    * the or-chain besides — hence the callers' key-page cap
-    * ([[ProbeStamp.pushCap]]).
-    *
-    * Two Spark mechanics handled here: (1) the session's parquet
-    * IN-pushdown threshold is lifted to the chunk size — above the
-    * threshold Spark pushes parquet `FilterApi.in`, whose statistics
-    * and page checks use only the key set's min and max, which spans
-    * ~the whole file for hashed keys and silently reverts the probe to
-    * a full read (see [[PushChunk]]); (2) key sets beyond the chunk
-    * size split into chunked scans union'd together (keys are distinct
-    * → no duplicate rows), bounding each pushed or-chain's recursion
-    * depth. The Catalyst-side residual stays an InSet hash lookup
-    * either way. Chunk size = [[PushChunkConf]] if set, else
-    * [[PushChunk]] — see the depth/cost trade documented there. */
-  private[graft] def pushKeysIntoScan(spark: SparkSession, base: DataFrame,
-                                      keyCol: String,
-                                      keys: Array[Any]): DataFrame =
-    pushKeysIntoScanChunked(spark, base, keyCol, keys,
-      configuredChunk(spark))
-
-  private[graft] def pushKeysIntoScanChunked(
-      spark: SparkSession, base: DataFrame, keyCol: String,
-      keys: Array[Any], chunkSize: Int): DataFrame = {
-    if (keys.nonEmpty) PushThresholdScope.raise(spark, chunkSize)
-    keys.grouped(chunkSize)
-      .map(chunk => base.filter(col(keyCol).isin(chunk.toIndexedSeq: _*)))
-      .reduceOption(_ unionAll _)
-      .getOrElse(base.filter(lit(false)))
-  }
-
-  /** [[ngramNearDupStreamIndexed]] with BATCH-KEY PUSHDOWN — the
-    * foreachBatch form (round-13 verdict #2). Bands the micro-batch,
-    * collects its distinct probe keys (bounded: ≤ rows ×
-    * [[graft.operators.Dedup.NgramNumBands]] strings), and probes the
-    * bucketed index through [[pushKeysIntoScan]]; verify+rollup is the
-    * shared [[ngramVerifyRollup]], so the flag decision is identical to
-    * the stream-static join's per-batch contribution. The banding stage
-    * is computed twice (key collect + join) — deliberately: re-hashing
-    * the BATCH is batch-sized CPU, while persisting it per micro-batch
-    * would leak cache entries across thousands of triggers. Falls back
-    * to the plain bucketed join when the batch has more keys than the
-    * index's stamped key pages can skip ([[ProbeStamp.pushCap]]: half
-    * the key pages per file, at most [[MaxPushedKeys]]).
-    *
-    * SESSION SIDE EFFECT (direct API only): a pushed probe lifts the
-    * session's `spark.sql.parquet.pushdown.inFilterThreshold` to the
-    * pushdown chunk size, and this DIRECT form leaves it raised — the
-    * returned plan is compiled lazily, so a save/restore here would
-    * race execution. The STREAMING WRITERS restore it: they own the
-    * batch lifecycle, so each trigger runs inside
-    * [[PushThresholdScope]] and the session conf is back to its prior
-    * value once in-flight pushed batches drain (r14 verdict #5).
-    * Mixing both forms in ONE session is safe (r15 advice #3): the
-    * direct raise records a sticky session floor with
-    * [[PushThresholdScope]], and scope-outs never restore the
-    * threshold below it — so a draining scoped stream cannot degrade a
-    * direct plan's lazy compilation to parquet's min/max-only
-    * `FilterApi.in` (see [[PushChunk]]). Deployments
-    * using the direct form can cap the raise via
-    * `spark.graft.pushdown.chunk` (see [[pushKeysIntoScan]]). */
-  def ngramNearDupBatchPushed(spark: SparkSession, batch: DataFrame,
-                              indexTable: String): DataFrame = {
-    requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
-    ngramBatchProbe(spark, batch, spark.table(indexTable),
-      probeStamp(spark, indexTable)
-        .pushCap(graft.operators.Dedup.NgramNumBands))._1
-  }
-
-  /** One batch of the gram-set probe against an ALREADY-RESOLVED base
-    * frame, pushing its keys under `cap` (see [[prunedBase]]); returns
-    * the flag frame and the form taken. Split from
-    * [[ngramNearDupBatchPushed]] so the streaming writer pays catalog
-    * resolution + the banding check ONCE at construction, not once per
-    * micro-batch (measured ~2.5 s/batch of fixed overhead in the
-    * cold-gate harness before the split). */
-  private def ngramBatchProbe(spark: SparkSession, batch: DataFrame,
-      base: DataFrame, cap: Int): (DataFrame, String) = {
-    val banded = ngramBandFrame(batch)
-    val (scan, form) = prunedBase(spark, base, "pkey", banded, cap)
-    (ngramVerifyRollup(banded, scan), form)
-  }
-
-  /** Shared pruning step of every pushed probe: collect the banded
-    * batch's distinct keys (bounded by the doc × band fan-out; the
-    * collect is one batch-sized job) and constrain the index scan via
-    * [[pushKeysIntoScan]]. A key set beyond `cap`
-    * ([[ProbeStamp.pushCap]]) takes the plain bucketed join — the scan
-    * could not skip enough key pages to pay for the pushed keys — and
-    * `cap` 0 skips the collect. Returns the scan and the form taken. */
-  private[graft] def prunedBase(spark: SparkSession, base: DataFrame,
-      keyCol: String, banded: DataFrame, cap: Int): (DataFrame, String) =
-    if (cap == 0) (base, "plain")
-    else {
-      val keys = described(spark, s"gate key collect: $keyCol (pushed)") {
-        banded.select(keyCol).distinct().limit(cap + 1).collect().map(_.get(0))
-      }
-      if (keys.length > cap) (base, "plain")
-      else (pushKeysIntoScan(spark, base, keyCol, keys), "pushed")
-    }
-
-  /** Wire [[ngramNearDupBatchPushed]] as a streaming sink: each
-    * micro-batch probes the bucketed index with its own key set pushed
-    * into the scan, and the per-batch flag frame goes to `sink`. Returns
-    * the writer — the caller sets checkpoint/trigger and starts. Note
-    * the contract shift vs the stream-static form: flags are PER BATCH
-    * (each doc decided once, when it arrives), not cumulative update-
-    * mode state — the gate decision is the same, the counts reset. */
-  def ngramNearDupPushedWriter(spark: SparkSession, docs: DataFrame,
+  /** foreachBatch form of [[ngramNearDupStreamIndexed]] — see
+    * [[minhashNearDupWriter]]. */
+  def ngramNearDupWriter(spark: SparkSession, docs: DataFrame,
       indexTable: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      : DataStreamWriter[Row] = {
     requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
     // resolve the catalog table ONCE: a per-batch spark.table() is a
     // metastore round-trip per trigger, pure fixed overhead
     val base = spark.table(indexTable)
-    val cap = probeStamp(spark, indexTable)
-      .pushCap(graft.operators.Dedup.NgramNumBands)
-    docs.writeStream.foreachBatch {
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        gateBatch(spark, "ngram", cap, id, sink)(
-          ngramBatchProbe(spark, b.toDF(), base, cap))
-    }
-  }
-
-  /** [[ngramNearDupPushedWriter]] / plain bucketed probe, SELECTED BY
-    * THE INDEX'S MEASURED LAYOUT — see [[minhashNearDupWriter]] for the
-    * mechanism (r14 verdict #4). */
-  def ngramNearDupWriter(spark: SparkSession, docs: DataFrame,
-      indexTable: String)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
-    val base = spark.table(indexTable)
-    val cap = probeStamp(spark, indexTable)
-      .autoCap(graft.operators.Dedup.NgramNumBands)
-    docs.writeStream.foreachBatch {
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        gateBatch(spark, "ngram", cap, id, sink)(
-          ngramBatchProbe(spark, b.toDF(), base, cap))
-    }
+    gateWriter(spark, docs, "ngram", sink)(ngramProbe(_, base))
   }
 
   /** Streaming line (span) dedup against a STATIC base corpus — the
@@ -1496,9 +1042,8 @@ object PipelineStreams {
     *     the base word-set hashes, built ONCE at construction —
     *     `maybe_dup`, FPR-bounded),
     *  4. near-dup evidence vs the base corpus (the bucketed ngram
-    *     probe, PUSHED when the index has the key pages to skip — per-
-    *     batch index reads bounded by the batch's own band keys, the
-    *     100 TB shape — else the plain bucketed join).
+    *     probe: the batch's band rows join the index with no base-side
+    *     Exchange).
     *
     * Output per doc: the evidence flags + the first-match
     * `drop_reason` ('eval_holdout' > 'quality' > 'duplicate' >
@@ -1510,43 +1055,26 @@ object PipelineStreams {
   def curationIngestWriter(spark: SparkSession, docs: DataFrame,
       ngramIndexTable: String, baseSfDir: String,
       maxBloomBytes: Int = GateMaxBloomBytes)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     import graft.operators.Curation
     requireBanding(spark, ngramIndexTable, graft.operators.Dedup.NgramBanding)
-    // resolved/built ONCE at construction (the pushed-writer lesson):
-    // the catalog table, and the base corpus's Bloom literal
+    // resolved/built ONCE at construction: the catalog table, and the
+    // base corpus's Bloom literal
     val base = spark.table(ngramIndexTable)
     val baseKeys = graft.sources.Tables.load(spark, baseSfDir, "documents")
       .select(Curation.wordSetHash(col("text")).as("th"))
     val bloomProbe = Curation.bloomLiteral(baseKeys, "th", maxBloomBytes)
-    // probe form and key-page cap from the index's build-time layout
-    // measurement (r14 verdict #4); an unstamped index fails fast at
-    // construction.
-    val cap = probeStamp(spark, ngramIndexTable)
-      .autoCap(graft.operators.Dedup.NgramNumBands)
-    docs.writeStream.foreachBatch {
-      (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        gateBatch(spark, "curation", cap, id, sink)(
-          curationIngest(spark, b.toDF(), base, bloomProbe, cap))
-    }
+    gateWriter(spark, docs, "curation", sink)(
+      curationIngestBatch(spark, _, base, bloomProbe))
   }
 
   /** One micro-batch of [[curationIngestWriter]] — split out so specs
-    * can drive it as a plain batch function. `pushed` pushes the near-dup
-    * probe's keys up to [[MaxPushedKeys]], whatever the index's key
-    * pages; the writer caps them by the index's stamp instead. */
+    * can drive it as a plain batch function. `pushed` has no effect: the
+    * benchmark's ingest check is its only caller that passes it, and the
+    * next change to the benchmark drops the argument. */
   private[graft] def curationIngestBatch(
       spark: SparkSession, batch: DataFrame, ngramBase: DataFrame,
-      bloomProbe: Option[Column], pushed: Boolean = true): DataFrame =
-    curationIngest(spark, batch, ngramBase, bloomProbe,
-      if (pushed) MaxPushedKeys else 0)._1
-
-  /** [[curationIngestBatch]] with the near-dup probe's push cap, also
-    * returning the form taken. */
-  private def curationIngest(
-      spark: SparkSession, batch: DataFrame, ngramBase: DataFrame,
-      bloomProbe: Option[Column], cap: Int): (DataFrame, String) = {
+      bloomProbe: Option[Column], pushed: Boolean = false): DataFrame = {
     import graft.operators.Curation
     val flagged = Curation.qualityFlags(batch)
       .withColumn("pass_quality", col("pass_word_count") &&
@@ -1561,10 +1089,9 @@ object PipelineStreams {
         .withColumn("maybe_dup", p)
         .drop("th")
     }
-    val (probe, form) = ngramBatchProbe(spark, batch, ngramBase, cap)
-    val near = probe.select(col("doc_id"), lit(true).as("near_flag"),
-      col("max_jaccard"), col("example_base_doc"))
-    (withDup.join(near, Seq("doc_id"), "left")
+    val near = ngramProbe(batch, ngramBase).select(col("doc_id"),
+      lit(true).as("near_flag"), col("max_jaccard"), col("example_base_doc"))
+    withDup.join(near, Seq("doc_id"), "left")
       .withColumn("is_near_dup", coalesce(col("near_flag"), lit(false)))
       .withColumn("drop_reason",
         when(col("is_eval"), lit("eval_holdout"))
@@ -1575,7 +1102,6 @@ object PipelineStreams {
       .withColumn("final_kept", col("drop_reason") === "kept")
       .select(col("doc_id"), col("pass_quality"), col("is_eval"),
         col("maybe_dup"), col("is_near_dup"), col("max_jaccard"),
-        col("example_base_doc"), col("final_kept"), col("drop_reason")),
-      form)
+        col("example_base_doc"), col("final_kept"), col("drop_reason"))
   }
 }

@@ -205,6 +205,31 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(s.catalog.tableExists("documents"))
   }
 
+  test("a file: URI sfDir: views bind, the artifact cache key follows a " +
+      "rewritten input, and build sizing sees its bytes") {
+    import graft.operators.Dedup
+    // a java.io.File stat of a URI finds no file: every table was
+    // skipped, the cache key was constant and the input measured 0 bytes
+    val s = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("graft-views-uri")
+    val sfUri = dir.toUri.toString.stripSuffix("/")
+    assert(sfUri.startsWith("file:"))
+    val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001",
+      "documents").orderBy("doc_id")
+    def writeDocs(n: Int): Unit =
+      docs.limit(n).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    writeDocs(60)
+    val key = Dedup.cacheKeyFor(s, sfUri, "v", "documents")
+    assert(Dedup.inputBytes(s, sfUri, "documents") > 0)
+    GraftViews.register(s, sfUri, only = Set("quality_filter"))
+    assert(s.catalog.tableExists("documents"))
+    assert(s.catalog.tableExists("quality_filter"))
+    assert(s.sql("SELECT count(*) FROM documents").head().getLong(0) === 60)
+    writeDocs(40)
+    assert(Dedup.cacheKeyFor(s, sfUri, "v", "documents") !== key,
+      "cache key unchanged for a rewritten input")
+  }
+
   private object TextHashesRef {
     def md5_32(s: String): Long =
       graft.functions.TextHashes.md5_32(s.getBytes("UTF-8"))

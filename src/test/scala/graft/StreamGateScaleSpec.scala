@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.PipelineStreams
@@ -129,6 +130,45 @@ class StreamGateScaleSpec extends AnyFunSuite {
     assert(tBig <= math.max(3.0, 4.0 * tSmall),
       f"$gate per-batch time grew ${tBig / tSmall}%.1fx at a 10x base " +
         f"($tSmall%.2fs -> $tBig%.2fs) — static side re-executing per batch?")
+
+  /** One trigger of a foreachBatch gate writer over `docs` (doc_id,
+    * lang, text): the doc ids its sink received, the sink frame's plan
+    * and the job description the sink ran under. */
+  private def writerBatch(docs: DataFrame,
+      writer: (DataFrame, (DataFrame, Long) => Unit) =>
+        DataStreamWriter[Row]): (Set[Long], String, String) = {
+    val input = MemoryStream[StreamDoc](spark)
+    @volatile var got = (Set.empty[Long], "", "")
+    val q = writer(input.toDF(), (df, _) => {
+        val plan = df.queryExecution.executedPlan.toString
+        got = (df.select("doc_id").collect().map(_.getLong(0)).toSet, plan,
+          spark.sparkContext.getLocalProperty("spark.job.description"))
+      })
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("gs_writer").toString)
+      .start()
+    try {
+      input.addData(docs.select("doc_id", "lang", "text").collect()
+        .map(r => StreamDoc(r.getLong(0), r.getString(1), r.getString(2),
+          new java.sql.Timestamp(0L))).toIndexedSeq)
+      q.processAllAvailable()
+    } finally q.stop()
+    got
+  }
+
+  /** The writer form's contract on a bucketed index: the same flagged
+    * doc set as the indexed probe, no Exchange on the base side, and the
+    * sink job named after the gate. */
+  private def assertWriterForm(gate: String, flagged: Set[Long],
+                               got: (Set[Long], String, String)): Unit = {
+    val (ids, plan, desc) = got
+    assert(ids === flagged)
+    assert(plan.contains("SortMergeJoin"), plan.take(2000))
+    assert("Exchange hashpartitioning\\(band_j".r.findAllIn(plan).length === 1,
+      s"expected ONLY the batch side to exchange:\n${plan.take(2000)}")
+    assert(plan.contains("Bucketed: true"), plan.take(2000))
+    assert(desc === s"$gate gate: sink write")
+  }
 
   test("embedding near-dup gate: per-batch time flat at a 10x base") {
     val s = vecGateBatchSeconds("gs_emb_s",
@@ -406,6 +446,11 @@ class StreamGateScaleSpec extends AnyFunSuite {
         s"expected ONLY the probe side to exchange, found $exchanges:\n" +
           plan.take(2000))
       assert(plan.contains("Bucketed: true"), plan.take(2000))
+      // the foreachBatch writer form, on the same batch
+      assertWriterForm("minhash", rows(idx).map(_._1), writerBatch(
+        graft.sources.Tables.load(spark, smallSf, "documents")
+          .filter(col("doc_id") % 11 === 0),
+        PipelineStreams.minhashNearDupWriter(spark, _, table)(_)))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -440,251 +485,13 @@ class StreamGateScaleSpec extends AnyFunSuite {
         s"expected ONLY the probe side to exchange, found $exchanges:\n" +
           plan.take(2000))
       assert(plan.contains("Bucketed: true"), plan.take(2000))
+      // the foreachBatch writer form, on the same batch
+      assertWriterForm("ngram", rows(idx).map(_._1),
+        writerBatch(probe, PipelineStreams.ngramNearDupWriter(spark, _, table)(_)))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
-  }
-
-  test("pushed ngram gate: same answers as the bucketed probe, batch keys " +
-      "pushed into the scan, no base-side Exchange") {
-    import graft.operators.Dedup
-    val table = "gs_ngram_pushed_index"
-    // one-row pages in one bucket (a few files): ~10k key pages per
-    // file, the index a ~3.6k-key batch can prune (see
-    // Testing.withPageRows); at one page per file it would fall back
-    Testing.withPageRows(1)(
-      Dedup.writeNgramIndexTable(spark, smallSf, table, nBuckets = 1))
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      val probe = graft.sources.Tables.load(spark, smallSf, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .filter(col("doc_id") % 11 === 0)
-      def rows(d: org.apache.spark.sql.DataFrame) =
-        d.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getDouble(2), r.getLong(3))).toSet
-      val plain = PipelineStreams
-        .ngramNearDupStreamIndexed(spark, probe, table)
-      val pushed = PipelineStreams
-        .ngramNearDupBatchPushed(spark, probe, table)
-      assert(rows(pushed) === rows(plain))
-      assert(rows(pushed).nonEmpty)
-      // the scan must carry the batch's key set as a parquet-pushed IN —
-      // THE point of the pushed form: per-batch reads are the pages the
-      // keys touch (on an index with many more key pages per file than
-      // keys, as here), not a sorted-stream merge of the whole base. (After
-      // pruning, BOTH join sides are batch-sized, so which side
-      // exchanges or broadcasts is immaterial — the corpus-sized base
-      // never enters the join at all. The sibling bucketed tests' no-
-      // base-exchange contract guards the UNPUSHED fallback path.)
-      val plan = PipelineStreams
-        .ngramNearDupBatchPushed(spark, probe, table)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters: [In(pkey"),
-        plan.take(2000))
-      // a key set larger than the parquet IN threshold must STILL push
-      // exactly (the helper lifts the session threshold to PushChunk):
-      // the default (10) would silently fall back to parquet's
-      // FilterApi.in, whose page checks use only the set's min and max —
-      // a range that covers ~everything for hashed keys.
-      assert(spark.conf.get(
-        "spark.sql.parquet.pushdown.inFilterThreshold").toInt >
-        PipelineStreams.PushChunk,
-        "pushKeysIntoScan did not raise the parquet IN-pushdown threshold")
-      // this probe (~450 docs x 8 bands ≈ 3.6k keys) exceeds PushChunk,
-      // so the plan must be CHUNKED scans union'd — an unchunked or(eq)
-      // chain at this depth StackOverflows parquet's recursive stat
-      // evaluators (measured; the reason PushChunk exists)
-      assert("PushedFilters: \\[In\\(pkey".r.findAllIn(plan).length >= 2,
-        s"expected multiple chunked pushed scans:\n${plan.take(2000)}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
-  }
-
-  test("pushed minhash gate: same answers as the bucketed probe, batch " +
-      "keys pushed into the scan") {
-    import graft.operators.Dedup
-    val table = "gs_minhash_pushed_index"
-    // ~450 docs x 4 bands: one-row pages in one bucket give each file
-    // the key pages to prune that many keys
-    Testing.withPageRows(1)(
-      Dedup.writeMinhashIndexTable(spark, smallSf, table, nBuckets = 1))
-    try {
-      val probe = graft.sources.Tables.load(spark, smallSf, "documents")
-        .select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 11 === 0)
-      def rows(d: org.apache.spark.sql.DataFrame) =
-        d.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getDouble(2), r.getLong(3))).toSet
-      val plain = PipelineStreams
-        .minhashNearDupStreamIndexed(spark, probe, table)
-      val pushed = PipelineStreams
-        .minhashNearDupBatchPushed(spark, probe, table)
-      assert(rows(pushed) === rows(plain))
-      assert(rows(pushed).nonEmpty)
-      val plan = PipelineStreams
-        .minhashNearDupBatchPushed(spark, probe, table)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters: [In(band_key"),
-        plan.take(2000))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
-  }
-
-  test("pushKeysIntoScan chunk edges: empty, exact chunk, chunk+1, conf-driven") {
-    import graft.streaming.PipelineStreams
-    val dir = java.nio.file.Files.createTempDirectory("push_edges").toString
-    spark.range(0, 5000).select(col("id"),
-        concat(lit("k"), col("id")).as("key"))
-      .write.mode("overwrite").parquet(dir)
-    val base = spark.read.parquet(dir)
-    // a 1-key chunk's In simplifies to EqualTo before pushdown — both
-    // forms are a pushed key predicate
-    def pushedScans(df: org.apache.spark.sql.DataFrame): Int =
-      "(In|EqualTo)\\(key,".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
-    // this table is the worst measured case for chain depth (short
-    // dictionary-encoded keys, where the default chunk overflowed
-    // NON-deterministically) — the conf escape hatch pins the safe
-    // chunk, and this spec runs the edges under it
-    val C = 256
-    spark.conf.set(PipelineStreams.PushChunkConf, C.toString)
-    try {
-      // empty key set: no scan at all (constant-folded to empty)
-      val none = PipelineStreams.pushKeysIntoScan(spark, base, "key",
-        Array.empty[Any])
-      assert(none.count() === 0)
-      // exactly one chunk of keys: ONE pushed scan
-      val oneChunk = PipelineStreams.pushKeysIntoScan(spark, base, "key",
-        (0 until C).map(i => s"k$i": Any).toArray)
-      assert(pushedScans(oneChunk) === 1)
-      assert(oneChunk.count() === C)
-      // chunk+1: TWO pushed scans, no duplicate rows across chunks
-      val twoChunks = PipelineStreams.pushKeysIntoScan(spark, base, "key",
-        (0 to C).map(i => s"k$i": Any).toArray)
-      assert(pushedScans(twoChunks) === 2)
-      assert(twoChunks.count() === C + 1)
-      assert(twoChunks.select("key").distinct().count() === C + 1)
-    } finally spark.conf.unset(PipelineStreams.PushChunkConf)
-  }
-
-  test("pushed ngram gate on a one-page-per-file index: a 40-doc batch " +
-      "plans no pushed In, same rows as on a many-page index") {
-    import graft.operators.Dedup
-    val onePage = "gs_ngram_one_page_index"
-    val manyPages = "gs_ngram_many_pages_index"
-    Dedup.writeNgramIndexTable(spark, smallSf, onePage, nBuckets = 8)
-    Testing.withPageRows(1)(
-      Dedup.writeNgramIndexTable(spark, smallSf, manyPages, nBuckets = 8))
-    try {
-      val onePageStamp = PipelineStreams.probeStamp(spark, onePage)
-      info(s"stamps: one-page index $onePageStamp, " +
-        s"many-page index ${PipelineStreams.probeStamp(spark, manyPages)}")
-      val files = spark.table(onePage).inputFiles.length
-      assert(onePageStamp.keyFiles === files)
-      assert(onePageStamp.keyPages === files)
-      // 40 docs x 8 bands: far more keys than the one-page index has
-      // pages per file, fewer than half the many-page index's
-      val probe = graft.sources.Tables.load(spark, smallSf, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .filter(col("doc_id") % 11 === 0 && col("doc_id") < 440)
-      assert(probe.count() === 40)
-      def run(table: String) = {
-        val df = PipelineStreams.ngramNearDupBatchPushed(spark, probe, table)
-        (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getLong(3))).toSet, df.queryExecution.executedPlan.toString)
-      }
-      val (oneRows, onePlan) = run(onePage)
-      val (manyRows, manyPlan) = run(manyPages)
-      assert(!onePlan.contains("PushedFilters: [In(pkey"), onePlan.take(2000))
-      assert(manyPlan.contains("PushedFilters: [In(pkey"), manyPlan.take(2000))
-      assert(oneRows === manyRows)
-      assert(oneRows.nonEmpty)
-    } finally Seq(onePage, manyPages)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("pushed key cap: |keys| = key pages per file / 2 pushes, one key " +
-      "more falls back") {
-    import graft.operators.Dedup
-    import PipelineStreams.ProbeStamp
-    val table = "gs_ngram_cap_index"
-    Testing.withSmallPages(Dedup.writeNgramIndexTable(spark,
-      smallSf.replace("sf0.1", "sf0.01"), table, nBuckets = 4))
-    try {
-      // the stamp counts the key column's pages over the index files:
-      // two-row pages, so ceil(rows / 2) per file
-      val stamp = PipelineStreams.probeStamp(spark, table)
-      val perFile = spark.table(table).groupBy(input_file_name()).count()
-        .collect().map(_.getLong(1))
-      assert(stamp.keyPages === perFile.map(n => (n + 1) / 2).sum)
-      assert(stamp.keyFiles === perFile.length)
-      val cap = stamp.pushCap(Dedup.NgramNumBands)
-      assert(cap === stamp.keyPages / (2 * stamp.keyFiles))
-      val keys = spark.table(table).select("pkey").distinct()
-        .orderBy("pkey").limit(cap + 1).collect().map(_.getString(0))
-      assert(keys.length === cap + 1)
-      def form(n: Int): String = PipelineStreams.prunedBase(spark,
-        spark.table(table), "pkey", keys.take(n).toSeq.toDF("pkey"), cap)._2
-      assert(form(cap) === "pushed")
-      assert(form(cap + 1) === "plain")
-      // the cap is per file; MaxPushedKeys still bounds it; an index
-      // that cannot take one document's keys never pushes (and skips
-      // the collect)
-      assert(ProbeStamp("pushed", 1L << 40, 1).pushCap(8) ===
-        PipelineStreams.MaxPushedKeys)
-      assert(ProbeStamp("pushed", 16, 1).pushCap(8) === 8)
-      assert(ProbeStamp("pushed", 15, 1).pushCap(8) === 0)
-      assert(ProbeStamp("pushed", 64, 4).pushCap(8) === 8)
-      assert(ProbeStamp("pushed", 64, 5).pushCap(8) === 0)
-      assert(ProbeStamp("plain", 1L << 40, 1).autoCap(8) === 0)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
-  }
-
-  // No pushed simhash test: the pushed form was built, measured 20x
-  // WORSE than the plain bucketed probe at x100 (combo_key's 20-run
-  // interleaved sort defeats page pruning — 91 MB/30.7 s vs 2 MB/1.5 s
-  // per batch), and removed. PipelineStreams documents the mechanism.
-
-  test("pushed ngram gate fallback: a key set beyond MaxPushedKeys takes " +
-      "the plain bucketed join, same answers") {
-    import graft.operators.Dedup
-    val table = "gs_ngram_fallback_index"
-    // the builder's layout (bucketed and sorted on (band_j, pkey)) in
-    // ONE file of one-row pages: ~40k key pages in the file lift the
-    // key-page cap to its MaxPushedKeys ceiling, so the key collect runs
-    // and the ceiling, not the index's page count, is what sends the
-    // batch to the plain join (at the default one page per file the cap
-    // is 0 and no key collect runs)
-    Testing.withPageRows(1) {
-      Dedup.ngramGateIndex(spark, smallSf).coalesce(1).write
-        .mode("overwrite").bucketBy(1, "band_j", "pkey")
-        .sortBy("band_j", "pkey").saveAsTable(table)
-    }
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES" +
-      s"('graft.banding' = '${Dedup.NgramBanding}')")
-    Dedup.stampProbeStats(spark, table, "pkey")
-    try {
-      assert(PipelineStreams.probeStamp(spark, table)
-        .pushCap(Dedup.NgramNumBands) === PipelineStreams.MaxPushedKeys)
-      // the WHOLE corpus as one "batch": 5k docs x 8 bands ≈ 40k keys,
-      // over MaxPushedKeys (16384) — a backfill, not a stream trigger
-      val probe = graft.sources.Tables.load(spark, smallSf, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-      val pushed = PipelineStreams
-        .ngramNearDupBatchPushed(spark, probe, table)
-      val plan = pushed.queryExecution.executedPlan.toString
-      assert(!plan.contains("PushedFilters: [In(pkey"),
-        "fallback must NOT push a key filter:\n" + plan.take(2000))
-      def rows(d: org.apache.spark.sql.DataFrame) =
-        d.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getDouble(2), r.getLong(3))).toSet
-      val plain = PipelineStreams
-        .ngramNearDupStreamIndexed(spark, probe, table)
-      assert(rows(pushed) === rows(plain))
-      assert(rows(pushed).nonEmpty)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
   }
 
   test("DSIR importance gate: per-batch time flat at a 10x base") {

@@ -912,20 +912,6 @@ class StreamingSpec extends AnyFunSuite {
       // near_duplicate unless the changed word set happens to Bloom-FP
       assert(got(plainIds(1)).getAs[Boolean]("is_near_dup") === true)
 
-      // route equality (r15: the writer picks pushed vs plain from the
-      // index's measured probe-form stamp): the PLAIN near-dup route
-      // must produce the exact same decision table as the pushed one
-      val gotPlain = PipelineStreams.curationIngestBatch(
-          spark, batch, spark.table(table), bloom, pushed = false)
-        .collect().map(r => r.getLong(0) -> r).toMap
-      got.foreach { case (id, r) =>
-        val p = gotPlain(id)
-        assert(p.getAs[String]("drop_reason") ===
-          r.getAs[String]("drop_reason"), s"doc $id route parity")
-        assert(p.getAs[Boolean]("is_near_dup") ===
-          r.getAs[Boolean]("is_near_dup"), s"doc $id route parity")
-      }
-
       // and the streaming wiring end-to-end (writer form)
       val input = MemoryStream[StreamDoc](spark)
       @volatile var streamed: Map[Long, String] = Map.empty
@@ -942,6 +928,94 @@ class StreamingSpec extends AnyFunSuite {
         assert(streamed ===
           Map(plainIds(0) -> "duplicate", plainIds(2) -> "quality"))
       } finally q.stop()
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
+  test("composite ingest gate: a 3,000-doc batch at the default thread " +
+      "stack, batch and writer forms agree with the component gates") {
+    import graft.streaming.PipelineStreams.StreamDoc
+    import graft.operators.{Curation, Dedup}
+    val sf = "/root/testdata/sf0.01"
+    val table = "si_curation_3k_index"
+    Dedup.writeNgramIndexTable(spark, sf, table, nBuckets = 4)
+    try {
+      // a backed-up ingest trigger: 3,000 messages cycling over the base
+      // corpus, every other one with one letter changed inside a long
+      // word (its word set leaves the Bloom, its length and most grams
+      // stay the base doc's), so the batch carries thousands of distinct
+      // band keys. Pushed into the index scan as parquet or-chains, a key
+      // set this size overflowed a 1 MB task stack; this suite's forked
+      // JVM sets no -Xss.
+      def perturb(text: String): String = {
+        val words = text.split(" ")
+        val wi = words.indexWhere(w => w.length >= 6 && w.forall(_.isLetter))
+        if (wi < 0) text
+        else {
+          val w = words(wi)
+          words.updated(wi, w.updated(3, if (w(3) == 'q') 'z' else 'q'))
+            .mkString(" ")
+        }
+      }
+      val base = graft.sources.Tables.load(spark, sf, "documents")
+        .orderBy("doc_id").select("lang", "text").collect()
+      val ts0 = new java.sql.Timestamp(0L)
+      val docs = (0 until 3000).map { i =>
+        val r = base(i % base.length)
+        val text = if (i % 2 == 0) r.getString(1) else perturb(r.getString(1))
+        StreamDoc(i + 1L, r.getString(0), text, ts0)
+      }
+      val batch = docs.toDF()
+      val baseKeys = graft.sources.Tables.load(spark, sf, "documents")
+        .select(Curation.wordSetHash(col("text")).as("th"))
+      val bloom = Curation.bloomLiteral(baseKeys, "th",
+        PipelineStreams.GateMaxBloomBytes)
+      val got = PipelineStreams.curationIngestBatch(
+          spark, batch, spark.table(table), bloom)
+        .collect().map(r => r.getLong(0) -> r).toMap
+      assert(got.size === docs.size)
+
+      // one writer trigger over the same docs decides the same way
+      val input = MemoryStream[StreamDoc](spark)
+      @volatile var streamed: Map[Long, String] = Map.empty
+      val q = PipelineStreams
+        .curationIngestWriter(spark, input.toDF(), table, sf)(
+          (d, _) => streamed = d.select("doc_id", "drop_reason").collect()
+            .map(r => r.getLong(0) -> r.getString(1)).toMap)
+        .start()
+      try {
+        input.addData(docs)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(streamed === got.map { case (id, r) =>
+        id -> r.getAs[String]("drop_reason") })
+
+      // a sampled subset against the standalone gates
+      val sample = batch.filter(col("doc_id") % 25 === 0)
+      val bloomGot = PipelineStreams.bloomGateStream(spark, sample, sf)
+        .select("doc_id", "maybe_dup").collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      val nearGot = PipelineStreams
+        .ngramNearDupStreamIndexed(spark, sample, table)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      val qualGot = PipelineStreams.qualityFilterStream(sample)
+        .select("doc_id", "is_kept").collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      val evalGot = sample.select(col("doc_id"),
+          Curation.isEvalId(col("doc_id"))).collect()
+        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      assert(qualGot.size === 120)
+      val reasons = qualGot.keys.toSeq.map { id =>
+        val expect =
+          if (evalGot(id)) "eval_holdout"
+          else if (!qualGot(id)) "quality"
+          else if (bloomGot(id)) "duplicate"
+          else if (nearGot(id)) "near_duplicate"
+          else "kept"
+        assert(got(id).getAs[String]("drop_reason") === expect, s"doc $id")
+        expect
+      }
+      assert(reasons.toSet.contains("duplicate"))
+      assert(reasons.toSet.contains("near_duplicate"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
   }
 

@@ -14,13 +14,6 @@
 # feed SURVEY crossover claims (ADVICE r13).
 set -eo pipefail
 cd /root/repo
-# preflight: probe_stat (below) needs pyarrow — fail BEFORE the expensive
-# builds, not between builds and probes (which would leave a silently
-# probe-less JSONL, the exact truncation this script's pipefail guards)
-python3 -c "import pyarrow.parquet" || {
-  echo "gate_cold.sh: python3 pyarrow is required (tools/probe_runs.py)" >&2
-  exit 1
-}
 OUT="${1:-/tmp/gate_cold.jsonl}"
 : > "$OUT"
 WH=/root/repo/.localdata/gatewh
@@ -42,26 +35,6 @@ run() { # run <main args...>
 run build /root/testdata/sf0.1 x1
 [ -n "$GATE_X10" ] && [ -d .localdata/sf1 ] && run build /root/repo/.localdata/sf1 x10
 [ -d .localdata/sf10 ] && run build /root/repo/.localdata/sf10 x100
-
-# Independent pyarrow recomputation of the probe-form statistic (r15
-# verdict #5): runs/file per stamped index, no Spark/Scala in the loop.
-# Compare each line's runs_per_file against the byte-adjacent
-# "key_runs" in the build lines above — they must agree exactly; the
-# stamp's scale invariance shows as equal runs_per_file across x1/x100.
-probe_stat() { # probe_stat <label>  (if-guards: set -e must not trip
-  # on absent decades — x10/x100 are optional)
-  for spec in minhash:band_key ngram:pkey simhash:combo_key; do
-    g="${spec%%:*}"; k="${spec##*:}"
-    d="$WH/warehouse/gate_${g}_$1"
-    if [ -d "$d" ]; then
-      python3 tools/probe_runs.py "$d" "$k" | tee -a "$OUT"
-    fi
-  done
-  return 0
-}
-probe_stat x1
-if [ -n "$GATE_X10" ]; then probe_stat x10; fi
-probe_stat x100
 
 drop_caches
 run probe x1
