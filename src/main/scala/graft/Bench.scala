@@ -158,135 +158,6 @@ object Bench {
     // warmup: touch every source table + the heaviest shared derivations
     Seq("watermarks", "token_count", "embedding_topk").foreach(materialize)
 
-    // Persist-once artifact builds, charged as their OWN named rows
-    // (round-9 verdict #6): without this, whichever consumer ran first
-    // alphabetically paid the build and the per-query floor recorded a
-    // cached-read time for the rest — so driver runs structurally
-    // flagged sub-100ms artifact consumers whose sibling paid the build
-    // in the floor run. Build rows run once (a second trial would read
-    // the cache and time nothing), before the measured loop, so every
-    // consumer below measures net of its artifacts. Subset runs skip
-    // them (they never advance the baseline; first-consumer-pays is fine
-    // for local iteration).
-    val artifactBuilds: Seq[(String, () => Any)] = Seq(
-      // The family-independent word-set base (tokenize + hash + collapse)
-      // is its own build row (r18, same protocol as the ngram rep table):
-      // both MinHash family builds consume it, so charging it to
-      // whichever family ran first double-counted the subtree — build
-      // once, band twice (opt guide §2.4).
-      ("artifact_minhash_base",
-        () => graft.operators.Dedup.wordSetBase(spark, sfDir)),
-      ("artifact_minhash_pairs",
-        () => graft.operators.Dedup.verifiedPairs(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_minhash_pairs_b",
-        () => graft.operators.Dedup.verifiedPairsB(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The doc components table: dedup_components and centrality_keep
-      // both ran the fixpoint (r18); compute once, consumers join it.
-      ("artifact_doc_components",
-        () => graft.operators.Dedup.docComponents(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_ngram_signatures",
-        () => {
-          graft.operators.Dedup.ngramDocs(spark, sfDir)
-            .queryExecution.toRdd.count()
-          // the r11 collapse's rep table shares the row: gram table +
-          // its one-shuffle rep aggregate are the build, consumers
-          // measure net of both
-          graft.operators.Dedup.ngramReps(spark, sfDir)
-            .queryExecution.toRdd.count()
-        }),
-      ("artifact_term_counts",
-        () => graft.operators.TextAnalysis.termCounts(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The per-doc vocabulary-coverage table (r18): two rows evaluate
-      // it (its own query, quality_signals' vocab leg), each a
-      // corpus-sized rollup over the inverted index; built once.
-      ("artifact_vocab_coverage",
-        () => graft.operators.TextAnalysis.vocabCoverage(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The Gopher flag and repetition-signal corpus kernel passes
-      // (r18): each evaluated by two rows (their own query +
-      // quality_signals' leg); one kernel pass per family per session.
-      ("artifact_quality_flags",
-        () => graft.operators.Curation.qualityFilter(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_rep_signals",
-        () => graft.operators.Curation.qualityRepetition(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_dup_spans",
-        () => graft.operators.Curation.cachedDupSpans(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_lm_model",
-        () => graft.operators.LangModel.lmModel(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The corpus scored against the LM model, as its own persist-once
-      // row (r18): six rows evaluate this subtree (its own query,
-      // lm_quality_buckets, quality_signals, the DSIR build,
-      // importance_sample twice) and each evaluation is a corpus
-      // tokenize + bigram explode + model join.
-      ("artifact_lm_scores",
-        () => graft.operators.LangModel.lmBigramScore(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_dsir_ratio",
-        () => graft.operators.Sampling.dsirRatioTable(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The per-language mix plan (r18): ONE corpus tokenize pass behind
-      // a dozen-row table, evaluated by three rows (source_mix_plan,
-      // stratified_sample, the curation decision build); built once,
-      // every sampler reads it.
-      ("artifact_source_mix",
-        () => graft.operators.Sampling.sourceMixPlan(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The 5-gram eval-contamination flags (r18): the corpus tokenize +
-      // gram-explode pass ran in both the decontaminate row and the
-      // decision build; published once per (corpus, holdout).
-      ("artifact_decontam",
-        () => graft.operators.Curation.decontaminate(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The curation decision frame (r18): curate_corpus and
-      // curation_report both consumed the four-sub-pipeline composition;
-      // one materialization, reports read the table.
-      ("artifact_curate_decision",
-        () => graft.operators.Curation.curateCorpus(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_cell_assignment",
-        () => graft.operators.Similarity.cellAssignment(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The four ANN method result slivers (r18): each method pipeline
-      // was evaluated twice per run (its own row + ann_recall's union),
-      // pq a third time in ann_recall_trained — each a full corpus probe
-      // pass for a Q×k-row result. Built once; consumers read the table.
-      ("artifact_ann_methods",
-        () => graft.operators.Similarity.annMethodsBase(spark, sfDir)),
-      // The exact cosine top-k — the ANN family's recall ground truth —
-      // was evaluated by three rows (r18); compute the table once.
-      ("artifact_exact_topk",
-        () => graft.operators.Similarity.embeddingTopK(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The embedding near-dup components table (r18): the banded
-      // near-dup pipeline + components fixpoint ran end-to-end in BOTH
-      // embedding_dedup_keep and curate_embeddings.
-      ("artifact_embedding_components",
-        () => graft.operators.Similarity.embeddingComponents(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_pq_trained_book",
-        () => graft.operators.Similarity.trainedBook(spark, sfDir)),
-      ("artifact_simhash_fp",
-        () => graft.operators.Dedup.cachedSimhash(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The once-per-MACHINE materialized log snapshots (r17): without
-      // these rows, whichever materialized-lag query ran first on a
-      // fresh machine — the driver's environment, EVERY round — paid the
-      // snapshot build inside its own timing, reading ~2.4x the floor set
-      // on warm-snapshot machines (the r16 consumer_lag_materialized
-      // flag, bisected to exactly this: 0.432 driver vs 0.18 warm).
-      ("artifact_log_snapshot",
-        () => graft.sources.LogTable.ensureMaterialized(spark, sfDir)),
-      ("artifact_topic_log_snapshot",
-        () => graft.sources.LogTable.ensureMaterializedTopicLog(spark, sfDir)))
-
     // Baseline from the previous run AT THE SAME SF *AND CPU COUNT*
     // (loaded up front so the measurement loop can use it for regression
     // confirmation). CPU-keyed floors (r17 verdict #6): the driver's
@@ -298,10 +169,13 @@ object Bench {
     // count now ratchets its own floor file; a missing keyed file seeds
     // from the legacy un-keyed file so pre-r18 history isn't lost.
     val sfKey = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    // floor and last-run files live under the repo's tools/, resolved
+    // against the working directory (sbt runs forked mains from the
+    // project root)
     val baselineFile = new java.io.File(
-      s"/root/repo/tools/bench_baseline_${sfKey}_c$cpus.json")
+      s"tools/bench_baseline_${sfKey}_c$cpus.json")
     val legacyBaselineFile = new java.io.File(
-      s"/root/repo/tools/bench_baseline_$sfKey.json")
+      s"tools/bench_baseline_$sfKey.json")
     val seedFile =
       if (baselineFile.exists()) baselineFile else legacyBaselineFile
     val prev: Map[String, Double] =
@@ -326,87 +200,34 @@ object Bench {
     // optional args = query-name subset for local iteration; the full run
     // (driver) passes none. Subset runs never advance the baseline.
     val subset = args.toSet
+    // Persist-once artifact builds (Artifacts.all), charged as their OWN
+    // named rows (round-9 verdict #6): without this, whichever consumer
+    // ran first alphabetically paid the build and the per-query floor
+    // recorded a cached-read time for the rest — so driver runs
+    // structurally flagged sub-100ms artifact consumers whose sibling
+    // paid the build in the floor run. Build rows run before the
+    // measured loop, so every consumer below measures net of its
+    // artifacts.
     // Subset runs time the artifact builds the subset NAMES explicitly
     // (r12 verdict #1: the five flagged rows were mostly artifact builds,
     // and subset mode could not isolate them at all); unnamed builds stay
     // skipped — first-consumer-pays is fine for local iteration, and
     // subset runs still never advance the baseline.
-    // Cache-droppers per artifact row, shared by the min-of-2 build loop
-    // below and the end-of-run reconfirm (a build trial against a warm
-    // persist-once cache would time nothing).
-    // ALL Dedup-family rows drop VARIANT-SCOPED (r18): a blanket module
-    // clearCaches between one row's min-of-2 trials would evict SIBLING
-    // artifacts built earlier in the loop (the shared word-set base, the
-    // pairs tables), mischarging later rows with their rebuilds; each
-    // row now drops exactly the cache entries its own build populates.
-    val artifactCaches: Map[String, SparkSession => Unit] = Map(
-      "artifact_minhash_base" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("wsall", "wsreps", "wsintra"))),
-      "artifact_minhash_pairs" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("pairs"))),
-      "artifact_minhash_pairs_b" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("pairsB"))),
-      "artifact_doc_components" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("doccomp"))),
-      "artifact_ngram_signatures" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir,
-          Seq("ngrams", "ngram_reps"))),
-      // variant-scoped (r18): a blanket TextAnalysis.clearCaches between
-      // the term_counts row's trials would evict the vocab table and
-      // vice versa
-      "artifact_term_counts" -> ((s: SparkSession) =>
-        graft.operators.TextAnalysis.clearTermCounts(s, sfDir)),
-      "artifact_vocab_coverage" -> ((s: SparkSession) =>
-        graft.operators.TextAnalysis.clearVocabCov(s, sfDir)),
-      "artifact_quality_flags" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearQualityFlags(s, sfDir)),
-      "artifact_rep_signals" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearRepSignals(s, sfDir)),
-      "artifact_dup_spans" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearDupSpans(s, sfDir)),
-      "artifact_lm_model" -> graft.operators.LangModel.clearCaches,
-      "artifact_lm_scores" -> ((s: SparkSession) =>
-        graft.operators.LangModel.clearScores(s, sfDir)),
-      // variant-scoped (r18): a blanket Sampling.clearCaches between the
-      // dsir row's trials would evict the mix plan built two rows earlier
-      "artifact_dsir_ratio" -> ((s: SparkSession) =>
-        graft.operators.Sampling.clearDsir(s, sfDir)),
-      "artifact_source_mix" -> ((s: SparkSession) =>
-        graft.operators.Sampling.clearSourceMix(s, sfDir)),
-      "artifact_decontam" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearDecontam(s, sfDir)),
-      "artifact_curate_decision" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearDecision(s, sfDir)),
-      "artifact_cell_assignment" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearCells(s, sfDir)),
-      "artifact_ann_methods" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearAnnMethods(s, sfDir)),
-      "artifact_embedding_components" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearComponents(s, sfDir)),
-      "artifact_exact_topk" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearTopK(s, sfDir)),
-      "artifact_pq_trained_book" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearBook(s, sfDir)),
-      "artifact_simhash_fp" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearSimhash(s, sfDir)),
-      // the snapshot "cache" is the on-disk tmpdir directory itself;
-      // dropping it makes the min-of-2 second trial a real rebuild.
-      // Variant-scoped so one row's drops never destroy the sibling
-      // row's freshly built snapshot (a cross-row drop forced a third,
-      // untimed full rebuild in the re-warm loop every run).
-      "artifact_log_snapshot" -> ((_: SparkSession) =>
-        graft.sources.LogTable.dropSnapshots(sfDir, "logtable")),
-      "artifact_topic_log_snapshot" -> ((_: SparkSession) =>
-        graft.sources.LogTable.dropSnapshots(sfDir, "topiclog")))
+    // Each row drops exactly its own registry variants before a trial
+    // (Artifact.drop): a blanket clear between one row's min-of-2 trials
+    // would evict SIBLING artifacts built earlier in the loop (the shared
+    // word-set base, the pairs tables), mischarging later rows with
+    // their rebuilds.
     val artSelected =
-      if (subset.isEmpty) artifactBuilds
-      else artifactBuilds.filter(b => subset(b._1))
+      if (subset.isEmpty) Artifacts.all
+      else Artifacts.all.filter(a => subset(a.name))
     val artResults: Seq[(String, Double, Option[String])] =
-      artSelected.map { case (name, build) =>
+      artSelected.map { art =>
+        val name = art.name
         System.err.println(s"[bench] $name")
         def trial(): (Double, Option[String]) = {
           val t0 = System.nanoTime()
-          try { build(); ((System.nanoTime() - t0) / 1e9, None) }
+          try { art.build(spark, sfDir); ((System.nanoTime() - t0) / 1e9, None) }
           catch { case e: Throwable =>
             (-1.0, Some(s"${e.getClass.getSimpleName}: " +
               String.valueOf(e.getMessage).take(120)))
@@ -423,20 +244,20 @@ object Bench {
         // once-per-MACHINE snapshot rows would otherwise time a no-op on
         // warm machines and a real build on fresh ones (the driver,
         // every round) — a machine-bimodal floor that flags structurally.
-        val r1 = { artifactCaches.get(name).foreach(_(spark)); trial() }
+        val r1 = { art.drop(spark, sfDir); trial() }
         val r2 =
           if (r1._2.isDefined) r1
-          else { artifactCaches.get(name).foreach(_(spark)); trial() }
+          else { art.drop(spark, sfDir); trial() }
         val ok = Seq(r1, r2).collect { case (s, None) => s }
         (name, if (ok.nonEmpty) ok.min else -1.0,
           if (ok.isEmpty) r1._2 else None)
       }
-    // Untimed re-warm: a later sibling's cache drop (the modules share
-    // clearCaches) may have evicted an earlier artifact — rebuild all
-    // selected artifacts once so every consumer below measures net of a
-    // WARM artifact set, the contract the per-row floors were set under.
-    artSelected.foreach { case (_, build) =>
-      try build() catch { case _: Throwable => () }
+    // Untimed re-warm: a later row's rebuild may have evicted an earlier
+    // artifact (a rewritten input, a failed trial) — rebuild all selected
+    // artifacts once so every consumer below measures net of a WARM
+    // artifact set, the contract the per-row floors were set under.
+    artSelected.foreach { art =>
+      try art.build(spark, sfDir) catch { case _: Throwable => () }
     }
     val names0 = SparkEntry.queries.keys.toSeq.sorted
     val names = if (subset.isEmpty) names0 else names0.filter(subset)
@@ -472,18 +293,19 @@ object Bench {
     // the 7.2x artifact_pq_trained_book driver outlier was structurally
     // invisible — artifact rows were excluded from flagging because an
     // in-loop repeat would read the warm cache and time nothing). The
-    // confirmation here is a REBUILD after dropping the owning module's
-    // persist-once caches, run after the whole query loop — wall-clock
+    // confirmation here is a REBUILD after dropping the row's own
+    // registry variants, run after the whole query loop — wall-clock
     // minutes away from the original window, so it discriminates
     // transient host spikes from structural regressions exactly like the
     // query reconfirm below.
     val results = artResults.map {
       case (name, sec, None) if looksRegressed(name, sec) =>
         System.err.println(s"[bench] reconfirm $name (cache-dropping rebuild)")
-        artifactCaches.get(name).foreach(_(spark))
+        val art = artSelected.find(_.name == name).get
+        art.drop(spark, sfDir)
         val t0 = System.nanoTime()
         val again =
-          try { artifactBuilds.toMap.apply(name)(); (System.nanoTime() - t0) / 1e9 }
+          try { art.build(spark, sfDir); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => sec }
         (name, math.min(sec, again), None)
       case r => r
@@ -597,20 +419,14 @@ object Bench {
     // fail the bench.
     try {
       val lastFile = new java.io.File(
-        s"/root/repo/tools/last_bench_${sfKey}_c$cpus.json")
+        s"tools/last_bench_${sfKey}_c$cpus.json")
       val lw = new java.io.PrintWriter(lastFile)
       try lw.write(jsonLine + "\n") finally lw.close()
     } catch { case scala.util.control.NonFatal(_) => () }
     // release the session-scoped persist-once artifacts (verified pairs,
     // n-gram signatures, inverted index) before retiring the session
-    graft.operators.Dedup.clearCaches(spark)
-    graft.operators.TextAnalysis.clearCaches(spark)
-    graft.operators.LangModel.clearCaches(spark)
-    graft.operators.Similarity.clearCaches(spark)
-    graft.operators.Sampling.clearCaches(spark)
-    graft.operators.Curation.clearCaches(spark)
-    graft.streaming.PipelineStreams.clearCaches(spark)
-    // clearCaches releases are non-blocking (right for mid-session
+    Artifacts.clear(spark)
+    // Artifacts.clear releases are non-blocking (right for mid-session
     // eviction); at teardown drain synchronously so async unpersist
     // futures don't race executor-pool shutdown into harmless-but-noisy
     // RejectedExecutionException stacks after the JSON line

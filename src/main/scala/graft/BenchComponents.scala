@@ -85,7 +85,7 @@ object BenchComponents {
       .select(col("doc_a"), col("doc_b"))
     report(s"verified_pairs@$sfDir", real)
     sizes.foreach(n => report(s"star$n", starEdges(spark, n)))
-    graft.operators.Dedup.clearCaches(spark)
+    Artifacts.clear(spark)
     spark.stop()
   }
 }

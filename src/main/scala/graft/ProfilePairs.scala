@@ -117,7 +117,7 @@ object ProfilePairs {
       s"candPairs=${b.as("a").join(b.as("b"), candCond).count()} " +
       s"repPairs=${repPairs.count()}")
     // the end-to-end production build, cold caches, for reference
-    Dedup.clearCaches(spark)
+    Artifacts.clear(spark)
     Seq(all, reps, b, repPairs).foreach(_.unpersist(blocking = true))
     time("verifiedPairs end-to-end") {
       mat(Dedup.verifiedPairs(spark, sfDir))

@@ -57,72 +57,6 @@ object ProfileQueries {
 
     // warmup (same as Bench)
     Seq("watermarks", "token_count", "embedding_topk").foreach(mat)
-    // warm artifacts so consumers profile net of builds, like the bench
-    val artifacts: Seq[(String, () => Any)] = Seq(
-      ("artifact_minhash_base",
-        () => graft.operators.Dedup.wordSetBase(spark, sfDir)),
-      ("artifact_minhash_pairs",
-        () => graft.operators.Dedup.verifiedPairs(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_minhash_pairs_b",
-        () => graft.operators.Dedup.verifiedPairsB(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The doc components table: dedup_components and centrality_keep
-      // both ran the fixpoint (r18); compute once, consumers join it.
-      ("artifact_doc_components",
-        () => graft.operators.Dedup.docComponents(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_ngram_signatures",
-        () => {
-          graft.operators.Dedup.ngramDocs(spark, sfDir)
-            .queryExecution.toRdd.count()
-          graft.operators.Dedup.ngramReps(spark, sfDir)
-            .queryExecution.toRdd.count()
-        }),
-      ("artifact_term_counts",
-        () => graft.operators.TextAnalysis.termCounts(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_dup_spans",
-        () => graft.operators.Curation.cachedDupSpans(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_lm_model",
-        () => graft.operators.LangModel.lmModel(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_lm_scores",
-        () => graft.operators.LangModel.lmBigramScore(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_dsir_ratio",
-        () => graft.operators.Sampling.dsirRatioTable(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_source_mix",
-        () => graft.operators.Sampling.sourceMixPlan(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_decontam",
-        () => graft.operators.Curation.decontaminate(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_curate_decision",
-        () => graft.operators.Curation.curateCorpus(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_cell_assignment",
-        () => graft.operators.Similarity.cellAssignment(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      // The exact cosine top-k — the ANN family's recall ground truth —
-      // was evaluated by three rows (r18); compute the table once.
-      ("artifact_exact_topk",
-        () => graft.operators.Similarity.embeddingTopK(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_embedding_components",
-        () => graft.operators.Similarity.embeddingComponents(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_pq_trained_book",
-        () => graft.operators.Similarity.trainedBook(spark, sfDir)),
-      ("artifact_simhash_fp",
-        () => graft.operators.Dedup.cachedSimhash(spark, sfDir)
-          .queryExecution.toRdd.count()),
-      ("artifact_log_snapshot",
-        () => graft.sources.LogTable.ensureMaterialized(spark, sfDir)),
-      ("artifact_topic_log_snapshot",
-        () => graft.sources.LogTable.ensureMaterializedTopicLog(spark, sfDir)))
 
     // flags (e.g. -phases) are mode switches, not query names — leaving
     // them in the subset made `-phases` with no names profile NOTHING
@@ -130,9 +64,9 @@ object ProfileQueries {
     val subset = args.filterNot(_.startsWith("-")).toSet
     val names0 = SparkEntry.queries.keys.toSeq.sorted
     val queryNames = if (subset.isEmpty) names0 else names0.filter(subset)
-    val artNames = artifacts.map(_._1).toSet
     val artSelected =
-      if (subset.isEmpty) artifacts else artifacts.filter(a => subset(a._1))
+      if (subset.isEmpty) Artifacts.all
+      else Artifacts.all.filter(a => subset(a.name))
 
     println(f"${"query"}%-40s ${"sec"}%8s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"shufR_mb"}%9s ${"shufW_mb"}%9s")
@@ -152,60 +86,17 @@ object ProfileQueries {
         f"${tasks.get}%6d ${shufRead.get / 1e6}%9.2f ${shufWrite.get / 1e6}%9.2f")
     }
 
-    // artifact rows: profile the cold build (cache-dropped), like Bench.
-    // The minhash rows drop variant-scoped so a family row profiles the
-    // family build NET of the shared word-set base, matching the bench's
-    // per-row charging.
-    val variantDrops: Map[String, SparkSession => Unit] = Map(
-      "artifact_minhash_base" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("wsall", "wsreps", "wsintra"))),
-      "artifact_minhash_pairs" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("pairs"))),
-      "artifact_minhash_pairs_b" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("pairsB"))),
-      "artifact_doc_components" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir, Seq("doccomp"))),
-      "artifact_ngram_signatures" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearPairsVariants(s, sfDir,
-          Seq("ngrams", "ngram_reps"))),
-      "artifact_dup_spans" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearDupSpans(s, sfDir)),
-      "artifact_lm_scores" -> ((s: SparkSession) =>
-        graft.operators.LangModel.clearScores(s, sfDir)),
-      "artifact_dsir_ratio" -> ((s: SparkSession) =>
-        graft.operators.Sampling.clearDsir(s, sfDir)),
-      "artifact_source_mix" -> ((s: SparkSession) =>
-        graft.operators.Sampling.clearSourceMix(s, sfDir)),
-      "artifact_decontam" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearDecontam(s, sfDir)),
-      "artifact_curate_decision" -> ((s: SparkSession) =>
-        graft.operators.Curation.clearDecision(s, sfDir)),
-      "artifact_cell_assignment" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearCells(s, sfDir)),
-      "artifact_embedding_components" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearComponents(s, sfDir)),
-      "artifact_exact_topk" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearTopK(s, sfDir)),
-      "artifact_pq_trained_book" -> ((s: SparkSession) =>
-        graft.operators.Similarity.clearBook(s, sfDir)),
-      "artifact_simhash_fp" -> ((s: SparkSession) =>
-        graft.operators.Dedup.clearSimhash(s, sfDir)))
-    artSelected.foreach { case (name, build) =>
-      variantDrops.get(name) match {
-        case Some(drop) => drop(spark)
-        case None =>
-          // full drops are fine here: the three minhash rows run first
-          graft.operators.Dedup.clearCaches(spark)
-          graft.operators.TextAnalysis.clearCaches(spark)
-          graft.operators.Curation.clearCaches(spark)
-          graft.operators.LangModel.clearCaches(spark)
-          graft.operators.Sampling.clearCaches(spark)
-          graft.operators.Similarity.clearCaches(spark)
-      }
-      profile(name) { build(): Unit }
+    // artifact rows: profile the cold build (the row's own variants
+    // dropped), like Bench, so a family row profiles the family build NET
+    // of the shared word-set base
+    artSelected.foreach { art =>
+      art.drop(spark, sfDir)
+      profile(art.name) { art.build(spark, sfDir) }
     }
     // re-warm all artifacts so query rows measure net of builds
-    artifacts.foreach { case (_, b) => try b() catch { case _: Throwable => () } }
+    Artifacts.all.foreach { art =>
+      try art.build(spark, sfDir) catch { case _: Throwable => () }
+    }
     queryNames.foreach { n => profile(n)(mat(n)) }
 
     // -phases mode: per query, split DRIVER planning (analysis/

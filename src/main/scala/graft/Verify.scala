@@ -45,13 +45,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.operators.Dedup.clearCaches(spark)
-    graft.operators.TextAnalysis.clearCaches(spark)
-    graft.operators.LangModel.clearCaches(spark)
-    graft.operators.Similarity.clearCaches(spark)
-    graft.operators.Sampling.clearCaches(spark)
-    graft.operators.Curation.clearCaches(spark)
-    graft.streaming.PipelineStreams.clearCaches(spark)
+    Artifacts.clear(spark)
     // synchronous drain before stop — see Bench teardown comment
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))

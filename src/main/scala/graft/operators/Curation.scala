@@ -124,12 +124,8 @@ object Curation {
     * ([[curateCorpus]]) keeps its direct [[qualityFlags]] pass — it needs
     * the full doc columns for sampling, and is itself once-per-session. */
   def qualityFilter(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(spanCache, spark, sfDir, "quality_flags")(
+    graft.Artifacts.cached(spark, sfDir, "quality_flags")(
       qualityFilterUncached(spark, sfDir))
-
-  private[graft] def clearQualityFlags(spark: SparkSession,
-                                       sfDir: String): Unit =
-    Dedup.clearVariantsFor(spanCache, spark, sfDir, Seq("quality_flags"))
 
   private def qualityFilterUncached(spark: SparkSession,
                                     sfDir: String): DataFrame =
@@ -163,13 +159,8 @@ object Curation {
     * shape: contamination flags are published once per (corpus, holdout)
     * pair and every consumer reads the table. */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(spanCache, spark, sfDir, "decontam")(
+    graft.Artifacts.cached(spark, sfDir, "decontam")(
       decontaminateUncached(spark, sfDir))
-
-  /** Variant-scoped dropper for the contamination flags (the bench's
-    * artifact_decontam row must not evict dup-spans or the decision). */
-  private[graft] def clearDecontam(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(spanCache, spark, sfDir, Seq("decontam"))
 
   private def decontaminateUncached(spark: SparkSession,
                                     sfDir: String): DataFrame = {
@@ -458,18 +449,8 @@ object Curation {
     * production shape: a curation run publishes ONE decision table and
     * every report reads it. */
   def curateCorpus(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(spanCache, spark, sfDir, "curate_decision")(
+    graft.Artifacts.cached(spark, sfDir, "curate_decision")(
       curateCorpusUncached(spark, sfDir))
-
-  /** Variant-scoped dropper for the decision frame (the bench's
-    * artifact_curate_decision row must not evict the dup-spans table). */
-  private[graft] def clearDecision(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(spanCache, spark, sfDir, Seq("curate_decision"))
-
-  /** Variant-scoped dropper for the dup-spans table (the bench's
-    * artifact_dup_spans row must not evict the decision frame). */
-  private[graft] def clearDupSpans(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(spanCache, spark, sfDir, Seq("dup_spans"))
 
   private def curateCorpusUncached(spark: SparkSession,
                                    sfDir: String): DataFrame = {
@@ -578,12 +559,8 @@ object Curation {
     * repetition leg). Charged as its own bench row
     * `artifact_rep_signals` with a variant-scoped drop. */
   def qualityRepetition(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(spanCache, spark, sfDir, "rep_signals")(
+    graft.Artifacts.cached(spark, sfDir, "rep_signals")(
       qualityRepetitionUncached(spark, sfDir))
-
-  private[graft] def clearRepSignals(spark: SparkSession,
-                                     sfDir: String): Unit =
-    Dedup.clearVariantsFor(spanCache, spark, sfDir, Seq("rep_signals"))
 
   private def qualityRepetitionUncached(spark: SparkSession,
                                         sfDir: String): DataFrame =
@@ -793,6 +770,10 @@ object Curation {
       .agg(min("pos").as("s"), max("pos").as("e"), count(lit(1)).as("nwin"))
   }
 
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark` ([[graft.Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = graft.Artifacts.clear(spark)
+
   /** Session-scoped persist-once of the [[dupSpans]] result — the
     * classic big-build/small-artifact shape: building it is the corpus
     * window explode + shuffle (the span family's dominant stage), but
@@ -800,15 +781,9 @@ object Curation {
     * per maximal island). `span_dedup` and `span_scrub` share it, so the
     * second consumer pays a cache read, not a second corpus pass. Same
     * fingerprint-evicting registry contract as Dedup's signature
-    * tables; released by [[clearCaches]] in Bench/Verify teardown. */
-  private val spanCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  def clearCaches(spark: SparkSession): Unit =
-    Dedup.clearCacheFor(spanCache, spark)
-
+    * tables. */
   def cachedDupSpans(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(spanCache, spark, sfDir, "dup_spans")(
+    graft.Artifacts.cached(spark, sfDir, "dup_spans")(
       dupSpans(docs(spark, sfDir)
         .select(col("doc_id"), tokens(col("text")).as("toks"))))
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.operators.TextAnalysis.{normText, tokens}
 
 /** Deduplication family for a training-data pipeline over `documents`:
@@ -154,31 +155,6 @@ object Dedup {
       .drop("k", "sigs")
   }
 
-  /** Candidate pairs from LSH banding (docs sharing ≥1 band bucket),
-    * verified with exact Jaccard over the distinct word sets.
-    * Output: verified near-dup pairs (doc_a < doc_b, jaccard ≥ 0.9).
-    *
-    * Scale: the self-join is an equi-join on (band_j, band_key) — only
-    * same-bucket pairs are materialized; recall at s=0.9 with 4 bands of 4
-    * is 1-(1-0.9^4)^4 ≈ 0.986 (deterministic: both engines compute the same
-    * signatures, hence the same candidate set). */
-  /** Session-scoped persist-once of the verified-pairs table (round-3
-    * verdict #8): the signature pipeline is the expensive 20%-of-corpus
-    * scan; every consumer (pairs query, keep/drop, connected components)
-    * shares ONE materialization per (session, sfDir) — the batch analog of
-    * "persist the signature table once" from the production notes. */
-  private val pairsCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Cache keys embed the backing table's input fingerprint
-    * ([[graft.sources.Tables.fingerprint]]: each file's length and mtime,
-    * statted through the path's Hadoop FS), so REGENERATED testdata at
-    * the same path invalidates instead of silently serving stale pairs. */
-  private[graft] def cacheKeyFor(spark: SparkSession, sfDir: String,
-                                 variant: String, table: String): String =
-    s"$sfDir#$variant#" +
-      graft.sources.Tables.fingerprint(spark, s"$sfDir/$table.parquet")
-
   /** Compressed on-disk bytes of a backing table — the cheap (fs metadata
     * only) input-size measure the data-proportional shuffle sizing keys
     * off. Summed through the path's Hadoop FS, so a `file:`, s3a or hdfs
@@ -220,72 +196,19 @@ object Dedup {
     math.max(floor, math.min(4096L, sized).toInt)
   }
 
-  /** getOrElseUpdate with STALE-FINGERPRINT EVICTION: before inserting,
-    * any entry for the same (session, sfDir, variant) whose fingerprint no
-    * longer matches is unpersisted and dropped — regenerated testdata under
-    * a live session releases the old blocks instead of pinning both copies
-    * (MEMORY_AND_DISK) for the session's lifetime. Callers must hold no
-    * other reference to the evicted frame (all consumers re-resolve
-    * through this lookup). */
-  /** Release a cached frame's storage: the CacheManager entry for
-    * persisted frames, the underlying RDD blocks for localCheckpoint-built
-    * ones (Dataset.unpersist cannot reach those). */
-  private[graft] def releaseFrame(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    org.apache.spark.sql.graftbridge.Bridge.releaseCheckpointStorage(df)
-  }
-
-  /** Release and drop every cache entry belonging to `spark` — the ONE
-    * eviction loop (Sampling/Curation/Similarity each hand-rolled it;
-    * Similarity's copy used bare unpersist, skipping the checkpoint-
-    * storage release [[releaseFrame]] performs, so a discipline fix had
-    * to be re-applied per copy — r17 operators review #8). */
-  private[graft] def clearCacheFor(
-      cache: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-      spark: SparkSession): Unit = cache.synchronized {
-    cache.keys.filter(_._1 eq spark).toSeq.foreach { k =>
-      cache.remove(k).foreach(releaseFrame)
-    }
-  }
-
-  private[graft] def getOrUpdateEvicting(
-      cache: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-      spark: SparkSession, sfDir: String, variant: String,
-      table: String = "documents")(
-      build: => DataFrame): DataFrame = cache.synchronized {
-    val key = cacheKeyFor(spark, sfDir, variant, table)
-    val prefix = s"$sfDir#$variant#"
-    cache.keys
-      .filter(k => (k._1 eq spark) && k._2.startsWith(prefix) && k._2 != key)
-      .toSeq.foreach { k =>
-        releaseFrame(cache(k))
-        cache.remove(k)
-      }
-    cache.getOrElseUpdate((spark, key), {
-      val built = build
-      // an eagerly-checkpointed build is already materialized in block
-      // storage — persisting it again would store a second copy
-      if (org.apache.spark.sql.graftbridge.Bridge.checkpointRdd(built).isDefined)
-        built
-      else built.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
-
   /** Family-independent collapsed word-set base shared by BOTH MinHash
     * family builds (r17 verdict #3: the two families re-ran the
     * tokenize+hash+collapse subtree end-to-end — build it once, band
     * twice). `wsall` = per-doc word sets with the collapse key;
-    * `wsreps` = one row per DISTINCT set. Persist-once pairsCache
-    * variants, so [[clearCaches]] reclaims them with everything else;
+    * `wsreps` = one row per DISTINCT set. Persist-once registry entries;
     * the bench charges the base as its own artifact row
     * (`artifact_minhash_base`) and drops ONLY the family variants
     * between pairs-row trials. */
   private[graft] def wordSetAll(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "wsall")(
-      wordSetIds(spark, sfDir))
+    Artifacts.cached(spark, sfDir, "wsall")(wordSetIds(spark, sfDir))
 
   private[graft] def wordSetReps(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "wsreps")(
+    Artifacts.cached(spark, sfDir, "wsreps")(
       wordSetAll(spark, sfDir).groupBy("set_id").agg(
         min("doc_id").as("doc_id"),
         first("nw").as("nw"), // members share the set, hence nw
@@ -297,7 +220,7 @@ object Dedup {
     * independent, so cached once and unioned into both family builds. */
   private[graft] def wordSetIntraPairs(spark: SparkSession,
                                        sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "wsintra")({
+    Artifacts.cached(spark, sfDir, "wsintra") {
       val members = wordSetAll(spark, sfDir)
         .select(col("set_id"), col("doc_id"))
       members.as("x").join(members.as("y"),
@@ -305,55 +228,34 @@ object Dedup {
             col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
           lit(1.0).as("jaccard"))
-    })
+    }
 
   /** Materialize the base eagerly — persist alone is lazy, and a
     * self-join over a cold cache races both sides into computing the
     * same partitions (duplicate scans, not cache hits). The count jobs
     * run only when the entry is cold so a warm-path family build pays
     * zero extra actions. */
-  private[graft] def wordSetBase(spark: SparkSession, sfDir: String): Unit = {
-    def cold(variant: String): Boolean = pairsCache.synchronized {
-      !pairsCache.contains(
-        (spark, cacheKeyFor(spark, sfDir, variant, "documents")))
+  private[graft] def wordSetBase(spark: SparkSession, sfDir: String): Unit =
+    Seq[(String, (SparkSession, String) => DataFrame)](
+      "wsall" -> wordSetAll, "wsreps" -> wordSetReps,
+      "wsintra" -> wordSetIntraPairs).foreach { case (variant, frame) =>
+      if (!Artifacts.warm(spark, sfDir, variant))
+        frame(spark, sfDir).count(): Unit
     }
-    if (cold("wsall")) wordSetAll(spark, sfDir).count(): Unit
-    if (cold("wsreps")) wordSetReps(spark, sfDir).count(): Unit
-    if (cold("wsintra")) wordSetIntraPairs(spark, sfDir).count(): Unit
-  }
 
-  /** Release ONLY the named pairsCache variants for `(spark, sfDir)` —
-    * the bench's per-artifact-row cache dropper (a blanket
-    * [[clearCaches]] between the min-of-2 trials of a FAMILY row would
-    * evict the shared base and time base+family instead of the family
-    * build alone). sfDir-scoped so concurrent users of other data
-    * directories (parallel test suites) are untouched. */
-  private[graft] def clearVariantsFor(
-      cache: scala.collection.mutable.Map[(SparkSession, String), DataFrame],
-      spark: SparkSession, sfDir: String,
-      variants: Seq[String]): Unit = cache.synchronized {
-    val stale = cache.keys.filter { case (s, k) =>
-      (s eq spark) && variants.exists(v => k.startsWith(s"$sfDir#$v#"))
-    }.toSeq
-    stale.foreach { k =>
-      releaseFrame(cache(k))
-      cache.remove(k)
-    }
-  }
-
-  private[graft] def clearPairsVariants(spark: SparkSession, sfDir: String,
-      variants: Seq[String]): Unit =
-    clearVariantsFor(pairsCache, spark, sfDir, variants)
-
-  /** Variant-scoped dropper for the simhash fingerprint table (the
-    * bench's artifact_simhash_fp row — a blanket clearCaches would evict
-    * the warm minhash base/pairs mid-artifact-loop). */
-  private[graft] def clearSimhash(spark: SparkSession, sfDir: String): Unit =
-    clearVariantsFor(simhashCache, spark, sfDir, Seq("simhash_fp"))
-
+  /** Candidate pairs from LSH banding (docs sharing ≥1 band bucket),
+    * verified with exact Jaccard over the distinct word sets.
+    * Output: verified near-dup pairs (doc_a < doc_b, jaccard ≥ 0.9).
+    *
+    * Scale: the self-join is an equi-join on (band_j, band_key) — only
+    * same-bucket pairs are materialized; recall at s=0.9 with 4 bands of 4
+    * is 1-(1-0.9^4)^4 ≈ 0.986 (deterministic: both engines compute the same
+    * signatures, hence the same candidate set).
+    *
+    * Persist-once per (session, sfDir): every consumer (pairs query,
+    * keep/drop, connected components) shares one materialization. */
   def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "pairs")(
-      computeMinhashPairs(spark, sfDir))
+    Artifacts.cached(spark, sfDir, "pairs")(computeMinhashPairs(spark, sfDir))
 
   /** Verified pairs under an INDEPENDENT second hash family (indices
     * 16..31 of the same universal family) — the pooled-truth leg of
@@ -363,36 +265,12 @@ object Dedup {
     * primary family misses is a primary-banding miss, not a semantics
     * difference. */
   private[graft] def verifiedPairsB(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "pairsB")(
+    Artifacts.cached(spark, sfDir, "pairsB")(
       computeMinhashPairs(spark, sfDir, familyOffset = NumHashes))
 
-  /** Unpersist and drop every cached intermediate for `spark` — call when
-    * a session's input files changed or the session is being retired (the
-    * cache would otherwise pin the session and its blocks for the process
-    * lifetime, and serve stale pairs for rewritten sfDirs). */
-  def clearCaches(spark: SparkSession): Unit = pairsCache.synchronized {
-    val stale = pairsCache.keys.filter(_._1 eq spark).toSeq
-    stale.foreach { k =>
-      releaseFrame(pairsCache(k))
-      pairsCache.remove(k)
-    }
-    simhashCache.synchronized {
-      val sh = simhashCache.keys.filter(_._1 eq spark).toSeq
-      sh.foreach { k =>
-        releaseFrame(simhashCache(k))
-        simhashCache.remove(k)
-      }
-    }
-    val residue = loopResidue.filter(_._1 eq spark)
-    residue.foreach { case (_, df) => releaseFrame(df) }
-    loopResidue --= residue
-  }
-
-  /** Final persisted frames of past distributed fixpoint runs — the loop's
-    * result must stay cached while the caller consumes it, so it can't be
-    * unpersisted inside the loop; [[clearCaches]] reclaims them. */
-  private val loopResidue =
-    scala.collection.mutable.Buffer.empty[(SparkSession, DataFrame)]
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark` ([[Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = Artifacts.clear(spark)
 
   def dedupMinhashPairs(spark: SparkSession, sfDir: String): DataFrame =
     verifiedPairs(spark, sfDir)
@@ -660,11 +538,11 @@ object Dedup {
     * charged as the bench row `artifact_doc_components`. */
   private[graft] def docComponents(spark: SparkSession,
                                    sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "doccomp")({
+    Artifacts.cached(spark, sfDir, "doccomp") {
       val pairs = verifiedPairs(spark, sfDir).select("doc_a", "doc_b")
       val nPairs = pairs.count() // cache read: pairs is persist-once
       componentsOf(spark, pairs, nPairs).toDF("doc_id", "comp")
-    })
+    }
 
   def dedupComponents(spark: SparkSession, sfDir: String): DataFrame =
     docs(spark, sfDir).select(col("doc_id"))
@@ -765,7 +643,8 @@ object Dedup {
     *    and the loop inputs are unpersisted once the final
     *    (doc_id, rank, deg) frame is materialized, so nothing from the
     *    loop outlives the call but the result itself (registered in
-    *    [[loopResidue]] for end-of-query release, the components pattern).
+    *    [[Artifacts.holdUntilClear]] for end-of-session release, the
+    *    components pattern).
     *
     * Arithmetic is bit-identical to [[localPageRank]] and the DuckDB
     * oracle: `teleport + (num · Σ rank div deg) div den` on non-negative
@@ -829,7 +708,7 @@ object Dedup {
     org.apache.spark.sql.graftbridge.Bridge.releaseCheckpointStorage(rank)
     edgesD.unpersist(blocking = false)
     deg.unpersist(blocking = false)
-    pairsCache.synchronized { loopResidue += ((spark, ranked)) }
+    Artifacts.holdUntilClear(spark, ranked)
     ranked
   }
 
@@ -1035,7 +914,7 @@ object Dedup {
       iter += 1
     }
     edges.unpersist(blocking = false) // cur is fully materialized above
-    pairsCache.synchronized { loopResidue += ((spark, cur)) }
+    Artifacts.holdUntilClear(spark, cur)
     cur.select("doc_id", "comp")
   }
 
@@ -1095,11 +974,8 @@ object Dedup {
     * the corpus pass (measured: 6 parquet scans in the pair plan).
     * Charged as its own `artifact_simhash_fp` bench row, same
     * accounting as the MinHash signature base. */
-  private val simhashCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   def cachedSimhash(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(simhashCache, spark, sfDir, "simhash_fp")(
+    Artifacts.cached(spark, sfDir, "simhash_fp")(
       // EAGER checkpoint: the pair query references this frame five
       // times; a lazily-persisted cold cache would race all five into
       // duplicate corpus passes on the first action (the documented
@@ -1224,7 +1100,7 @@ object Dedup {
     * twice inside the query (band signatures + Jaccard verify) — same
     * persist-the-signature-table pattern as [[verifiedPairs]]. */
   private[graft] def ngramDocs(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "ngrams")(
+    Artifacts.cached(spark, sfDir, "ngrams")(
       // spreadIfNarrow (r17): char_grams_distinct + hash32 over the full
       // normalized text is the heaviest per-row kernel in the repo; the
       // single-row-group scan ran it on one task (see docWords)
@@ -1378,7 +1254,7 @@ object Dedup {
     * it — pay it once per (session, corpus), charged to the
     * `artifact_ngram_signatures` bench row alongside the gram table. */
   private[graft] def ngramReps(spark: SparkSession, sfDir: String): DataFrame =
-    getOrUpdateEvicting(pairsCache, spark, sfDir, "ngram_reps")(
+    Artifacts.cached(spark, sfDir, "ngram_reps")(
       repsOfNgram(ngramDocs(spark, sfDir)))
 
   /** The rep-table formula, shared by [[ngramReps]] and the
@@ -1604,10 +1480,12 @@ object Dedup {
       s"minchars=$NgramMinChars;n=3"
 
   /** Bucketed+sorted on the band/block join key: the base-side shuffle
-    * AND sort are paid once at write time, so an indexed probe joins
-    * with zero base-side Exchange/Sort per micro-batch — the layout for
-    * a base corpus that outgrows executor memory (the persist-once
-    * in-memory indices stop fitting long before 100 TB; SURVEY §7.9). */
+    * is paid once at write time, so an indexed probe joins with no
+    * base-side Exchange per micro-batch — the layout for a base corpus
+    * that outgrows executor memory (the persist-once in-memory indices
+    * stop fitting long before 100 TB; SURVEY §7.9). The base side is
+    * still SORTED on every micro-batch: a bucket spans several files,
+    * so Spark's bucketed scan reports no output ordering. */
   private def writeGateIndex(spark: SparkSession, df: DataFrame,
                              table: String, nBuckets: Int,
                              keys: Seq[String], banding: String): Unit = {

@@ -66,12 +66,9 @@ object LangModel {
     * explode — without the persist the batch scorer scans the corpus
     * twice per run, and the streaming gate rebuilds the model per
     * restart. Multi-consumer by design (batch query, stream gate, every
-    * bench repeat); released via [[clearCaches]]. */
-  private val modelCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
+    * bench repeat). */
   def lmModel(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(modelCache, spark, sfDir, "lm_model") {
+    graft.Artifacts.cached(spark, sfDir, "lm_model") {
       val model = bigramOccurrences(docs(spark, sfDir))
         .groupBy("bg").agg(count(lit(1)).as("cb"))
         .withColumn("w1", split(col("bg"), " ").getItem(0))
@@ -82,15 +79,9 @@ object LangModel {
             .as("lp_micro"))
     }
 
-  /** Unpersist and drop the cached LM models for `spark` — twin of
-    * [[Dedup.clearCaches]]. */
-  def clearCaches(spark: SparkSession): Unit = modelCache.synchronized {
-    val stale = modelCache.keys.filter(_._1 eq spark).toSeq
-    stale.foreach { k =>
-      modelCache(k).unpersist(blocking = false)
-      modelCache.remove(k)
-    }
-  }
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark` ([[graft.Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = graft.Artifacts.clear(spark)
 
   /** Per-doc LM score table, session-scoped persist-once (r18): six
     * bench rows evaluate this subtree — its own query, lm_quality_buckets,
@@ -101,13 +92,8 @@ object LangModel {
     * corpus once, route every consumer through the table), charged as
     * its own bench row `artifact_lm_scores` with a variant-scoped drop. */
   def lmBigramScore(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(modelCache, spark, sfDir, "lm_scores")(
+    graft.Artifacts.cached(spark, sfDir, "lm_scores")(
       lmBigramScoreUncached(spark, sfDir))
-
-  /** Variant-scoped dropper for the score table (the bench's
-    * artifact_lm_scores row must rebuild the SCORES, not the model). */
-  private[graft] def clearScores(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(modelCache, spark, sfDir, Seq("lm_scores"))
 
   private def lmBigramScoreUncached(spark: SparkSession,
                                     sfDir: String): DataFrame = {

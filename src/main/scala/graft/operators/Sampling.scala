@@ -53,18 +53,8 @@ object Sampling {
     * variant-scoped drop — the production shape: the mix plan is
     * published once per corpus snapshot and every sampler reads it. */
   def sourceMixPlan(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(modelCache, spark, sfDir, "source_mix")(
+    graft.Artifacts.cached(spark, sfDir, "source_mix")(
       sourceMixPlanUncached(spark, sfDir))
-
-  /** Variant-scoped dropper for the mix plan (the bench's
-    * artifact_source_mix row must not evict the DSIR ratio table). */
-  private[graft] def clearSourceMix(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(modelCache, spark, sfDir, Seq("source_mix"))
-
-  /** Variant-scoped dropper for the DSIR ratio table (the bench's
-    * artifact_dsir_ratio row must not evict the mix plan). */
-  private[graft] def clearDsir(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(modelCache, spark, sfDir, Seq("dsir_ratio"))
 
   private def sourceMixPlanUncached(spark: SparkSession,
                                     sfDir: String): DataFrame = {
@@ -386,26 +376,23 @@ object Sampling {
       .join(pass, Seq("doc_id"))
   }
 
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark` ([[graft.Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = graft.Artifacts.clear(spark)
+
   /** The trained DSIR artifact: (f, lr_micro) — per-feature integer
     * micro-nat log ratio ln p̂_target(f) − ln p̂_base(f), smoothed over
     * the occupied base support. Bounded by [[DsirBuckets]] rows, so it
     * broadcasts; [[importanceSample]] consumes it in-plan and the
     * streaming twin scores an unbounded stream against it (train-once,
-    * score-forever — the production deployment shape). */
-  /** Persist-once registry for the trained DSIR artifact — the streaming
+    * score-forever — the production deployment shape).
+    *
+    * Persist-once registry entry: the streaming
     * scorer re-executes its static subtree per micro-batch, and the batch
     * `importance_sample` consumes the table too; training (two corpus
-    * groupBys) must run once per (session, base). [[clearCaches]]
-    * releases it (Bench/Verify teardown). */
-  private val modelCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist and drop the cached DSIR ratio tables for `spark`. */
-  def clearCaches(spark: SparkSession): Unit =
-    Dedup.clearCacheFor(modelCache, spark)
-
+    * groupBys) must run once per (session, base). */
   def dsirRatioTable(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(modelCache, spark, sfDir, "dsir_ratio")(
+    graft.Artifacts.cached(spark, sfDir, "dsir_ratio")(
       dsirRatioTableUncached(spark, sfDir))
 
   private def dsirRatioTableUncached(spark: SparkSession,

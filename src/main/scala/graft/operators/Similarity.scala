@@ -81,23 +81,13 @@ object Similarity {
     * ground-truth table once, evaluate every method against it). Eager
     * (count at build) — recallTable joins it twice, and a lazy cold
     * cache would race both subtrees into duplicate evaluation. */
-  def embeddingTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = (spark, s"$sfDir#topk#${embFingerprint(spark, sfDir)}")
-    assignedCache.synchronized(assignedCache.get(key)).getOrElse {
+  def embeddingTopK(spark: SparkSession, sfDir: String): DataFrame =
+    cached(spark, sfDir, "topk") {
       val built = embeddingTopKUncached(spark, sfDir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       built.count()
-      assignedCache.synchronized {
-        assignedCache.get(key) match {
-          case Some(winner) =>
-            built.unpersist(blocking = false); winner
-          case None =>
-            evictStale(spark, s"$sfDir#topk#", key._2)
-            assignedCache.update(key, built); built
-        }
-      }
+      built
     }
-  }
 
   private def embeddingTopKUncached(spark: SparkSession,
                                     sfDir: String): DataFrame = {
@@ -109,10 +99,6 @@ object Similarity {
         dot(col("qv"), col("v")) / (sqrt(col("qn2")) * sqrt(col("n2"))))
     rankTopK(scored)
   }
-
-  /** Variant-scoped dropper for the exact top-k table. */
-  private[graft] def clearTopK(spark: SparkSession, sfDir: String): Unit =
-    clearAssignedPrefix(spark, s"$sfDir#topk#")
 
   /** LSH bucket id: sign bits of the projections onto NumPlanes
     * deterministic hyperplanes (Knuth-hashed flat index → [-0.5, 0.5)),
@@ -304,78 +290,34 @@ object Similarity {
     * cell (cosine argmax, N×C scoring with a broadcast centroid list — C
     * is fixed, so linear in N), and each query searches only its own cell.
     * The coarse-quantizer analog of [[embeddingAnnLsh]]; both bound
-    * candidates by an equi-join on a cell id. */
-  /** Session-scoped persist-once of the centroid assignment (same
+    * candidates by an equi-join on a cell id.
+    *
+    * The centroid assignment is session-scoped persist-once (same
     * pattern and staleness fingerprint as Dedup's signature tables): the
     * N×C scoring + per-vec window is the query's dominant stage, and
     * without the persist BOTH the probe side and the broadcast query side
     * recompute it. */
-  private val assignedCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Staleness fingerprint of the embeddings parquet (size + mtime of
-    * every part file) — keys every persist-once entry in this file.
-    * Via the Hadoop filesystem, not java.io.File (r17 operators review
-    * #3): on a non-local sfDir (s3a/hdfs — the 100 TB posture) a local
-    * File of the URI answers length 0 / mtime 0, making the fingerprint
-    * CONSTANT, so regenerated inputs would never evict stale cached
-    * assignments while fresh scans read the new data. */
-  private def embFingerprint(spark: SparkSession, sfDir: String): String =
-    graft.sources.Tables.fingerprint(spark, s"$sfDir/embeddings.parquet")
-
-  /** Release every persist-once artifact this object holds (centroid
-    * assignments, refined k-means assignments) — wired into the
-    * Verify/Bench teardown next to Dedup/TextAnalysis.clearCaches so a
-    * long-lived session can't accumulate stale persisted frames. */
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.operators.Dedup.clearCacheFor(assignedCache, spark)
-    bookCache.synchronized {
-      bookCache.keys.filter(_._1 eq spark).toSeq.foreach(bookCache.remove)
-    }
-  }
-
-  /** Evict-stale-on-insert for `assignedCache` (round-7 verdict #5, the
-    * same contract as [[Dedup.getOrUpdateEvicting]]): keys are
-    * `sfDir#variant#fingerprint`, and inserting a fresh fingerprint for
-    * the same (sfDir, variant) unpersists the superseded entry — a
-    * regenerated input directory can't leave orphaned persisted frames
-    * pinned for the session's lifetime. MUST be called under the cache
-    * monitor. */
-  private def evictStale(spark: SparkSession, prefix: String,
-                         key: String): Unit =
-    assignedCache.keys
-      .filter(k => (k._1 eq spark) && k._2.startsWith(prefix) && k._2 != key)
-      .toSeq.foreach { k =>
-        graft.operators.Dedup.releaseFrame(assignedCache(k))
-        assignedCache.remove(k)
-      }
-
   private[graft] def cellAssignment(spark: SparkSession, sfDir: String): DataFrame =
-    assignedCache.synchronized {
-      val fp = embFingerprint(spark, sfDir)
-      evictStale(spark, s"$sfDir#cell#", s"$sfDir#cell#$fp")
-      assignedCache.getOrElseUpdate((spark, s"$sfDir#cell#$fp"), {
-        val n = vectors(spark, sfDir)
-        val cents = n.filter(isCentroidVec(col("vec_id")))
-          .select(col("vec_id").as("c_id"), col("v").as("cv"),
-            col("n2").as("cn2"))
-        // argmax via window, NOT max_by: a max_by whose value struct
-        // carries the vector array has an immutable agg buffer, so both
-        // aggregate stages fall back to SortAggregate — measured 2×
-        // slower than this single window sort at sf0.1
-        n.join(broadcast(cents))
-          .withColumn("ccos",
-            dot(col("v"), col("cv")) / (sqrt(col("n2")) * sqrt(col("cn2"))))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("c_id"))))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("v"), col("n2"), col("c_id").as("cell"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    cached(spark, sfDir, "cell") {
+      val n = vectors(spark, sfDir)
+      val cents = n.filter(isCentroidVec(col("vec_id")))
+        .select(col("vec_id").as("c_id"), col("v").as("cv"),
+          col("n2").as("cn2"))
+      // argmax via window, NOT max_by: a max_by whose value struct
+      // carries the vector array has an immutable agg buffer, so both
+      // aggregate stages fall back to SortAggregate — measured 2×
+      // slower than this single window sort at sf0.1
+      n.join(broadcast(cents))
+        .withColumn("ccos",
+          dot(col("v"), col("cv")) / (sqrt(col("n2")) * sqrt(col("cn2"))))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("c_id"))))
+        .filter(col("rn") === 1)
+        .select(col("vec_id"), col("v"), col("n2"), col("c_id").as("cell"))
     }
 
   def embeddingAnnIvf(spark: SparkSession, sfDir: String): DataFrame =
-    cachedAnnMethod(spark, sfDir, "ivf")(embeddingAnnIvfUncached(spark, sfDir))
+    cached(spark, sfDir, "ann_ivf")(embeddingAnnIvfUncached(spark, sfDir))
 
   private def embeddingAnnIvfUncached(spark: SparkSession,
                                       sfDir: String): DataFrame = {
@@ -411,7 +353,7 @@ object Similarity {
     * and measured by `ann_recall`'s ivf2 rows). */
   def embeddingAnnIvfMultiprobe(spark: SparkSession,
                                 sfDir: String): DataFrame =
-    cachedAnnMethod(spark, sfDir, "ivf2")(
+    cached(spark, sfDir, "ann_ivf2")(
       embeddingAnnIvfMultiprobeUncached(spark, sfDir))
 
   private def embeddingAnnIvfMultiprobeUncached(spark: SparkSession,
@@ -455,13 +397,10 @@ object Similarity {
     * curate_embeddings ran the banded near-dup pipeline + the components
     * fixpoint end-to-end; one materialization per (session, corpus),
     * charged as its own bench row `artifact_embedding_components`.
-    * Double-checked like the Lloyd chain — the build runs Spark actions,
-    * so it must not hold the cache monitor; a losing racer unpersists
-    * its own build and adopts the winner's. */
+    * Built eagerly under its own registry entry's lock. */
   private[graft] def embeddingComponents(spark: SparkSession,
-                                         sfDir: String): DataFrame = {
-    val key = (spark, s"$sfDir#ncomp#${embFingerprint(spark, sfDir)}")
-    assignedCache.synchronized(assignedCache.get(key)).getOrElse {
+                                         sfDir: String): DataFrame =
+    cached(spark, sfDir, "ncomp") {
       val pairs = embeddingNearDup(spark, sfDir).select("vec_a", "vec_b")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // componentsOf fully materializes before returning, so the pairs
@@ -474,82 +413,35 @@ object Similarity {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         finally pairs.unpersist(blocking = false)
       comp.count()
-      assignedCache.synchronized {
-        assignedCache.get(key) match {
-          case Some(winner) =>
-            comp.unpersist(blocking = false); winner
-          case None =>
-            evictStale(spark, s"$sfDir#ncomp#", key._2)
-            assignedCache.update(key, comp); comp
-        }
-      }
-    }
-  }
-
-  /** Prefix-scoped dropper over assignedCache (its keys are ad-hoc
-    * "$sfDir#<kind>#<fp>" strings, not getOrUpdateEvicting variants). */
-  private def clearAssignedPrefix(spark: SparkSession,
-                                  prefix: String): Unit =
-    assignedCache.synchronized {
-      assignedCache.keys.filter { case (s, k) =>
-        (s eq spark) && k.startsWith(prefix)
-      }.toSeq.foreach { k =>
-        graft.operators.Dedup.releaseFrame(assignedCache(k))
-        assignedCache.remove(k)
-      }
+      comp
     }
 
-  /** Variant-scoped droppers for the bench's similarity artifact rows —
-    * each row rebuilds exactly its own cache entries, so one row's
-    * min-of-2 drops can no longer evict a sibling artifact built
-    * earlier in the loop (mischarging the re-warm). */
-  private[graft] def clearComponents(spark: SparkSession,
-                                     sfDir: String): Unit =
-    clearAssignedPrefix(spark, s"$sfDir#ncomp#")
-
-  private[graft] def clearCells(spark: SparkSession, sfDir: String): Unit =
-    clearAssignedPrefix(spark, s"$sfDir#cell#")
-
-  /** Session-scoped persist-once of ONE ANN method's top-k result table
-    * (r18): every method pipeline was evaluated TWICE per bench run (its
-    * own declared row plus ann_recall's union leg) and pq a third time in
+  /** Every persist-once entry in this file keys on the embeddings
+    * table's fingerprint.
+    *
+    * The ANN methods each persist ONE top-k result table (r18): every
+    * method pipeline was evaluated TWICE per bench run (its own declared
+    * row plus ann_recall's union leg) and pq a third time in
     * ann_recall_trained's detail — each evaluation a full corpus probe
     * pass. The result is a queries×TopK sliver (Q·k rows at ANY corpus
     * size), so the cache stores nothing data-proportional; charged as the
-    * bench row `artifact_ann_methods`. Keyed by the embeddings
-    * fingerprint like every entry in [[assignedCache]]. */
-  private def cachedAnnMethod(spark: SparkSession, sfDir: String,
-                              method: String)(
-      build: => DataFrame): DataFrame = assignedCache.synchronized {
-    val fp = embFingerprint(spark, sfDir)
-    val key = s"$sfDir#ann_$method#$fp"
-    evictStale(spark, s"$sfDir#ann_$method#", key)
-    assignedCache.getOrElseUpdate((spark, key),
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+    * bench row `artifact_ann_methods`. */
+  private def cached[T](spark: SparkSession, sfDir: String,
+                        variant: String)(build: => T): T =
+    graft.Artifacts.cached(spark, sfDir, variant, "embeddings")(build)
 
-  private[graft] def clearAnnMethods(spark: SparkSession,
-                                     sfDir: String): Unit =
-    RecallMethods.foreach(m => clearAssignedPrefix(spark, s"$sfDir#ann_$m#"))
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark` ([[graft.Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = graft.Artifacts.clear(spark)
 
   /** Materialize every method sliver eagerly (count only when cold, so a
     * warm path pays zero extra actions) — the bench's
     * `artifact_ann_methods` build row, mirroring [[Dedup.wordSetBase]]. */
   private[graft] def annMethodsBase(spark: SparkSession,
-                                    sfDir: String): Unit = {
-    val fp = embFingerprint(spark, sfDir)
+                                    sfDir: String): Unit =
     RecallMethods.foreach { m =>
-      val cold = assignedCache.synchronized(
-        !assignedCache.contains((spark, s"$sfDir#ann_$m#$fp")))
-      if (cold) annMethod(spark, sfDir, m).count(): Unit
-    }
-  }
-
-  private[graft] def clearBook(spark: SparkSession, sfDir: String): Unit =
-    bookCache.synchronized {
-      bookCache.keys.filter { case (s, k) =>
-        (s eq spark) && k.startsWith(s"$sfDir#")
-      }.toSeq.foreach(bookCache.remove)
+      if (!graft.Artifacts.warm(spark, sfDir, s"ann_$m", "embeddings"))
+        annMethod(spark, sfDir, m).count(): Unit
     }
 
   // ---- k-means refinement (semantic clustering over embeddings) ----
@@ -637,45 +529,29 @@ object Similarity {
     // persist + materialize + unpersist-superseded. The final assignment
     // stays persisted and is shared by kmeans_refine / cluster_purity /
     // curate_embeddings (same consumers-of-one-artifact scheme as
-    // Dedup.verifiedPairs); clearCaches releases it.
-    // The Lloyd chain runs SPARK ACTIONS (one count per iteration), so it
-    // must not run while holding the cache monitor — a concurrent
-    // cellAssignment/clearCaches caller would block for the whole chain
-    // (round-7 advice). Double-checked: peek under the lock, compute
-    // outside it, insert under the lock again; a losing racer unpersists
-    // its own chain and adopts the winner's.
-    val key = (spark, s"$sfDir#it$iters#${embFingerprint(spark, sfDir)}")
-    val refined = assignedCache.synchronized(assignedCache.get(key))
-      .getOrElse {
-        var cur = assigned
-        // a mid-chain failure (executor loss, OOM on the count) must not
-        // strand persisted intermediates outside every cache registry —
-        // release whatever this attempt pinned before rethrowing (r17
-        // operators review #4; trainPqCodebooks already does this)
-        try (1 to iters).foreach { _ =>
-          val next = lloydStep(cur)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try next.count() // materialize before dropping the superseded frame
-          catch { case t: Throwable =>
-            next.unpersist(blocking = false); throw t
-          }
-          if (cur ne assigned) cur.unpersist(blocking = false)
-          cur = next
-        } catch { case t: Throwable =>
-          if (cur ne assigned) cur.unpersist(blocking = false)
-          throw t
+    // Dedup.verifiedPairs). The Lloyd chain runs SPARK ACTIONS (one
+    // count per iteration) under this entry's lock only.
+    val refined = cached(spark, sfDir, s"kmeans_it$iters") {
+      var cur = assigned
+      // a mid-chain failure (executor loss, OOM on the count) must not
+      // strand persisted intermediates outside every cache registry —
+      // release whatever this attempt pinned before rethrowing (r17
+      // operators review #4; trainPqCodebooks already does this)
+      try (1 to iters).foreach { _ =>
+        val next = lloydStep(cur)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try next.count() // materialize before dropping the superseded frame
+        catch { case t: Throwable =>
+          next.unpersist(blocking = false); throw t
         }
-        assignedCache.synchronized {
-          assignedCache.get(key) match {
-            case Some(winner) =>
-              if (cur ne assigned) cur.unpersist(blocking = false)
-              winner
-            case None =>
-              evictStale(spark, s"$sfDir#it$iters#", key._2)
-              assignedCache.update(key, cur); cur
-          }
-        }
+        if (cur ne assigned) cur.unpersist(blocking = false)
+        cur = next
+      } catch { case t: Throwable =>
+        if (cur ne assigned) cur.unpersist(blocking = false)
+        throw t
       }
+      cur
+    }
     kmeansPresent(assigned, refined)
   }
 
@@ -808,7 +684,7 @@ object Similarity {
     // per-query regression guard
     book match {
       case None =>
-        cachedAnnMethod(spark, sfDir, "pq")(
+        cached(spark, sfDir, "ann_pq")(
           embeddingAnnPqUncached(spark, sfDir, None))
       case some => embeddingAnnPqUncached(spark, sfDir, some)
     }
@@ -918,25 +794,10 @@ object Similarity {
     * array, but 6 corpus passes to build) — one training per
     * (session, input fingerprint), shared by `embedding_ann_pq_trained`
     * and `ann_recall_trained` so the bench charges the Lloyd chain once.
-    * Entries die with [[clearCaches]] (nothing persisted cluster-side —
-    * the array is plain driver memory). */
-  private val bookCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), Array[Double]]
-
-  def trainedBook(spark: SparkSession, sfDir: String): Array[Double] = {
-    val key = (spark, s"$sfDir#${embFingerprint(spark, sfDir)}")
-    bookCache.synchronized(bookCache.get(key)).getOrElse {
-      val b = trainPqCodebooks(spark, sfDir)
-      bookCache.synchronized {
-        // drop superseded-fingerprint books for the same dir (plain
-        // driver arrays — no unpersist needed, just the map entry)
-        bookCache.keys
-          .filter(k => (k._1 eq spark) && k._2.startsWith(s"$sfDir#") && k._2 != key._2)
-          .toSeq.foreach(bookCache.remove)
-        bookCache.getOrElseUpdate(key, b)
-      }
-    }
-  }
+    * The array is plain driver memory: nothing is persisted
+    * cluster-side. */
+  def trainedBook(spark: SparkSession, sfDir: String): Array[Double] =
+    cached(spark, sfDir, "pq_book")(trainPqCodebooks(spark, sfDir))
 
   /** [[embeddingAnnPq]] with k-means-trained codebooks — the production
     * configuration as a benched, rows-only-verified query (round-7
@@ -1057,7 +918,7 @@ object Similarity {
   /** Approximate top-k: candidates restricted to the query's LSH bucket
     * (equi-join on bucket id — never Q×N), then exact cosine within. */
   def embeddingAnnLsh(spark: SparkSession, sfDir: String): DataFrame =
-    cachedAnnMethod(spark, sfDir, "lsh")(embeddingAnnLshUncached(spark, sfDir))
+    cached(spark, sfDir, "ann_lsh")(embeddingAnnLshUncached(spark, sfDir))
 
   private def embeddingAnnLshUncached(spark: SparkSession,
                                       sfDir: String): DataFrame = {

@@ -155,15 +155,12 @@ object TextAnalysis {
     * consumer (per-doc top-k AND corpus doc-freq below, any future BM25 /
     * posting-list op) derives from this one materialization per
     * (session, sfDir). Same scheme and fingerprinted cache key as
-    * [[Dedup.verifiedPairs]]; [[clearCaches]] releases it. This is a
+    * [[Dedup.verifiedPairs]]. This is a
     * MULTI-consumer cache (two aggregation branches in `top_terms` alone),
     * not the sole-consumer kind that would blind the bench's per-query
     * regression guard. */
-  private val termCountsCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
   def termCounts(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(termCountsCache, spark, sfDir, "term_counts")(
+    graft.Artifacts.cached(spark, sfDir, "term_counts")(
       // Data-proportional explicit repartition on the grouping key
       // (r13 verdict #4): the repartition IS the aggregation's exchange
       // (hash partitioning on the full grouping key satisfies the agg's
@@ -351,16 +348,9 @@ object TextAnalysis {
           coalesce(col("n_caught"), lit(0L))).as("all_caught"))
   }
 
-  /** Unpersist and drop the cached inverted-index artifacts for `spark`
-    * (input files changed / session retiring) — twin of
-    * [[Dedup.clearCaches]]. */
-  def clearCaches(spark: SparkSession): Unit = termCountsCache.synchronized {
-    val stale = termCountsCache.keys.filter(_._1 eq spark).toSeq
-    stale.foreach { k =>
-      termCountsCache(k).unpersist(blocking = false)
-      termCountsCache.remove(k)
-    }
-  }
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark` ([[graft.Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = graft.Artifacts.clear(spark)
 
   /** Per-document top-k distinctive terms — the inverted-index-shaped
     * workload (term statistics over the corpus): the persist-once
@@ -531,18 +521,8 @@ object TextAnalysis {
     * its own bench row `artifact_vocab_coverage` with a variant-scoped
     * drop, same protocol as the LM scores table. */
   def vocabCoverage(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.getOrUpdateEvicting(termCountsCache, spark, sfDir, "vocab_cov")(
+    graft.Artifacts.cached(spark, sfDir, "vocab_cov")(
       vocabCoverageUncached(spark, sfDir))
-
-  /** Variant-scoped droppers: the bench's artifact_term_counts row must
-    * rebuild ONLY the inverted index between its min-of-2 trials (a
-    * blanket [[clearCaches]] would evict the vocab table built later in
-    * the artifact loop, and vice versa). */
-  private[graft] def clearTermCounts(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(termCountsCache, spark, sfDir, Seq("term_counts"))
-
-  private[graft] def clearVocabCov(spark: SparkSession, sfDir: String): Unit =
-    Dedup.clearVariantsFor(termCountsCache, spark, sfDir, Seq("vocab_cov"))
 
   private def vocabCoverageUncached(spark: SparkSession,
                                     sfDir: String): DataFrame = {

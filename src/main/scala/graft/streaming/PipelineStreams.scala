@@ -18,26 +18,10 @@ import graft.operators.{Curation, TextAnalysis}
   */
 object PipelineStreams {
 
-  /** Persist-once registry for the gates' STATIC base indices (band keys,
-    * simhash block keys, boilerplate sliver). A stream-static join
-    * re-executes its static subtree on EVERY micro-batch — unpersisted,
-    * each batch would re-tokenize/re-hash the whole base corpus, making
-    * per-batch cost linear in base size instead of in batch size (the
-    * round-8 verdict's streaming-gates stress ask). Shares
-    * [[graft.operators.Dedup.getOrUpdateEvicting]]'s fingerprint-evicting
-    * contract; [[clearCaches]] releases, wired into Bench/Verify teardown
-    * next to the batch registries. */
-  private val staticIndexCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist and drop the cached static gate indices for `spark`. */
-  def clearCaches(spark: SparkSession): Unit = staticIndexCache.synchronized {
-    val stale = staticIndexCache.keys.filter(_._1 eq spark).toSeq
-    stale.foreach { k =>
-      graft.operators.Dedup.releaseFrame(staticIndexCache(k))
-      staticIndexCache.remove(k)
-    }
-  }
+  /** Kept for callers of the per-module teardown: releases every
+    * artifact of `spark`, the gates' static base indices included
+    * ([[graft.Artifacts.clear]]). */
+  def clearCaches(spark: SparkSession): Unit = graft.Artifacts.clear(spark)
 
   /** Typed row for document streams (tests / MemoryStream drivers). */
   case class StreamDoc(doc_id: Long, lang: String, text: String,
@@ -266,8 +250,8 @@ object PipelineStreams {
     // the whole base corpus (stream-static joins re-execute the static
     // subtree per batch) — per-batch cost must be probe-sized, not
     // base-sized
-    val base = graft.operators.Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_band_index", "embeddings") {
+    val base = graft.Artifacts.cached(
+        spark, baseSfDir, "gate_band_index", "embeddings") {
       Similarity.nearDupBandKeys(Similarity.normVectors(baseRaw), planes)
         .select(col("vec_id").as("base_id"), col("v").as("bv"),
           col("n2").as("bn2"), col("band_j"), col("bkey"))
@@ -297,10 +281,12 @@ object PipelineStreams {
   /** [[embeddingNearDupStream]] against a BUCKETED on-disk band index
     * ([[graft.operators.Similarity.writeBandIndexTable]]) — the layout
     * for a base corpus that outgrows executor memory: the static side
-    * joins with no Exchange and no Sort per micro-batch (bucketed+sorted
-    * on the join key; only the batch itself shuffles), and the planes
-    * the index was banded with come from the table property, so the
-    * probe cannot silently band differently from the index. */
+    * joins with no Exchange per micro-batch (bucketed on the join key;
+    * only the batch itself shuffles, though the base side is still
+    * sorted per batch — see [[graft.operators.Dedup]]'s gate index
+    * writer), and the planes the index was banded with come from the
+    * table property, so the probe cannot silently band differently from
+    * the index. */
   def embeddingNearDupStreamIndexed(spark: SparkSession, vecs0: DataFrame,
                                     indexTable: String): DataFrame = {
     val vecs = if (vecs0.columns.contains("vec_id")) vecs0
@@ -338,8 +324,7 @@ object PipelineStreams {
     // the shared [[Dedup.cachedSimhash]] artifact (r11), so a session
     // running both the batch pair query and this gate pays the corpus
     // tokenize+hash pass ONCE, not once per surface
-    val base = Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_simhash_index")(
+    val base = graft.Artifacts.cached(spark, baseSfDir, "gate_simhash_index")(
       Dedup.simhashGateIndex(spark, baseSfDir))
     simhashProbe(docs, base)
   }
@@ -362,10 +347,11 @@ object PipelineStreams {
 
   /** [[simhashNearDupStream]] against a BUCKETED on-disk block-key index
     * ([[graft.operators.Dedup.writeSimhashIndexTable]]) — the layout for
-    * a base corpus that outgrows executor memory: zero base-side
-    * Exchange/Sort per micro-batch (paid at write time), and the banding
-    * descriptor in the table properties must match this build's
-    * constants, so a probe cannot block differently from the index. */
+    * a base corpus that outgrows executor memory: no base-side Exchange
+    * per micro-batch (paid at write time; the base side is still sorted
+    * per batch), and the banding descriptor in the table properties
+    * must match this build's constants, so a probe cannot block
+    * differently from the index. */
   def simhashNearDupStreamIndexed(spark: SparkSession, docs: DataFrame,
                                   indexTable: String): DataFrame = {
     requireBanding(spark, indexTable, graft.operators.Dedup.SimhashBanding)
@@ -400,8 +386,7 @@ object PipelineStreams {
   def minhashNearDupStream(spark: SparkSession, docs: DataFrame,
                            baseSfDir: String): DataFrame = {
     import graft.operators.Dedup
-    val base = Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_minhash_index")(
+    val base = graft.Artifacts.cached(spark, baseSfDir, "gate_minhash_index")(
       Dedup.minhashGateIndex(spark, baseSfDir))
     minhashProbe(docs, base)
   }
@@ -432,8 +417,9 @@ object PipelineStreams {
   }
 
   /** [[minhashNearDupStream]] against a BUCKETED on-disk band index
-    * ([[graft.operators.Dedup.writeMinhashIndexTable]]): zero base-side
-    * Exchange/Sort per micro-batch, banding-descriptor-checked. */
+    * ([[graft.operators.Dedup.writeMinhashIndexTable]]): no base-side
+    * Exchange per micro-batch (the base side is still sorted per batch),
+    * banding-descriptor-checked. */
   def minhashNearDupStreamIndexed(spark: SparkSession, docs: DataFrame,
                                   indexTable: String): DataFrame = {
     requireBanding(spark, indexTable, graft.operators.Dedup.MinhashBanding)
@@ -496,8 +482,7 @@ object PipelineStreams {
   def ngramNearDupStream(spark: SparkSession, docs: DataFrame,
                          baseSfDir: String): DataFrame = {
     import graft.operators.Dedup
-    val base = Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_ngram_index")(
+    val base = graft.Artifacts.cached(spark, baseSfDir, "gate_ngram_index")(
       Dedup.ngramGateIndex(spark, baseSfDir))
     ngramProbe(docs, base)
   }
@@ -533,8 +518,9 @@ object PipelineStreams {
   }
 
   /** [[ngramNearDupStream]] against a BUCKETED on-disk band index
-    * ([[graft.operators.Dedup.writeNgramIndexTable]]): zero base-side
-    * Exchange/Sort per micro-batch, banding-descriptor-checked. */
+    * ([[graft.operators.Dedup.writeNgramIndexTable]]): no base-side
+    * Exchange per micro-batch (the base side is still sorted per batch),
+    * banding-descriptor-checked. */
   def ngramNearDupStreamIndexed(spark: SparkSession, docs: DataFrame,
                                 indexTable: String): DataFrame = {
     requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
@@ -575,8 +561,7 @@ object PipelineStreams {
     // persist-once: the boilerplate SLIVER is small, but learning it
     // re-chunks the whole base corpus — that must happen once per
     // (session, base), not once per micro-batch
-    val boiler = graft.operators.Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_boiler_sliver") {
+    val boiler = graft.Artifacts.cached(spark, baseSfDir, "gate_boiler_sliver") {
       Curation.chunkFrame(
           graft.sources.Tables.load(spark, baseSfDir, "documents")
             .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
@@ -620,8 +605,7 @@ object PipelineStreams {
   def spanDedupStream(spark: SparkSession, docs: DataFrame,
                       baseSfDir: String): DataFrame = {
     import graft.operators.Curation
-    val base = graft.operators.Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_span_index") {
+    val base = graft.Artifacts.cached(spark, baseSfDir, "gate_span_index") {
       Curation.spanWindows(
           graft.sources.Tables.load(spark, baseSfDir, "documents")
             .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
@@ -658,8 +642,8 @@ object PipelineStreams {
   def spanDedupStreamWinnow(spark: SparkSession, docs: DataFrame,
                             baseSfDir: String): DataFrame = {
     import graft.operators.Curation
-    val base = graft.operators.Dedup.getOrUpdateEvicting(
-        staticIndexCache, spark, baseSfDir, "gate_span_winnow_index") {
+    val base = graft.Artifacts.cached(
+        spark, baseSfDir, "gate_span_winnow_index") {
       Curation.winnowFingerprints(
           graft.sources.Tables.load(spark, baseSfDir, "documents")
             .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")))
@@ -674,8 +658,9 @@ object PipelineStreams {
     * [[graft.operators.Curation.writeSpanWinnowIndexTable]] — the
     * layout for a base whose WINNOWED fingerprint set still outgrows
     * executor memory. Bucketed+sorted on `f`: probes join with no
-    * Exchange and no Sort on the base side (plan-asserted in
-    * StreamGateScaleSpec). */
+    * Exchange on the base side (plan-asserted in StreamGateScaleSpec);
+    * the base side is still sorted per batch, since Spark's bucketed
+    * scan reports no ordering for a bucket spread over several files. */
   def spanDedupStreamWinnowIndexed(spark: SparkSession, docs: DataFrame,
                                    indexTable: String): DataFrame =
     winnowProbe(docs, spark.table(indexTable))

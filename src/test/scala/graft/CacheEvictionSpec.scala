@@ -79,13 +79,34 @@ class CacheEvictionSpec extends AnyFunSuite {
     assert(aIds.forall(!live.contains(_)),
       s"stale-fingerprint dup-spans entry leaked: RDDs $aIds still persisted")
     val bIds = backingIds(b)
-    graft.operators.Curation.clearCaches(spark)
+    Artifacts.clear(spark)
     // release is async (blocking = false) — poll briefly
     val deadline = System.nanoTime() + 10e9.toLong
     while (bIds.exists(live.contains) && System.nanoTime() < deadline)
       Thread.sleep(100)
     assert(bIds.forall(!live.contains(_)),
       s"clearCaches left dup-spans RDDs $bIds persisted")
+  }
+
+  test("Dedup.cachedSimhash: a checkpointed entry is stored once and " +
+      "Artifacts.clear frees its checkpoint") {
+    val B = org.apache.spark.sql.graftbridge.Bridge
+    val dir = scratchDir("documents")
+    def live = spark.sparkContext.getPersistentRDDs
+    val fp = Dedup.cachedSimhash(spark, dir)
+    fp.count()
+    val ck = B.checkpointRdd(fp)
+    assert(ck.exists(r => live.contains(r.id)),
+      "cachedSimhash is not backed by a stored local checkpoint")
+    // the registry must not persist a checkpoint-backed build again
+    assert(B.cachedRddIds(fp).isEmpty,
+      "checkpointed entry also holds an InMemoryRelation copy")
+    Artifacts.clear(spark)
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (live.contains(ck.get.id) && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    assert(!live.contains(ck.get.id),
+      s"Artifacts.clear left checkpoint RDD ${ck.get.id} stored")
   }
 
   test("local-checkpoint release: safe after materialize, THROWS out of order") {

@@ -492,7 +492,7 @@ class CurationSpec extends AnyFunSuite {
     // printed InMemoryRelation section double-counts the Generates.
     // Evict session caches so the count reads the FRESH plan (the gates
     // rebuild on next use; that is the persist-once contract).
-    graft.streaming.PipelineStreams.clearCaches(spark)
+    Artifacts.clear(spark)
     val plan = Curation.lineDedup(spark, sf)
       .queryExecution.executedPlan.toString
     // one explode feeds the boilerplate count, one the kept rebuild; the

@@ -209,7 +209,8 @@ class ExtensionsSpec extends AnyFunSuite {
       "rewritten input, and build sizing sees its bytes") {
     import graft.operators.Dedup
     // a java.io.File stat of a URI finds no file: every table was
-    // skipped, the cache key was constant and the input measured 0 bytes
+    // skipped, the cache entry never went stale and the input measured
+    // 0 bytes
     val s = spark.newSession()
     val dir = java.nio.file.Files.createTempDirectory("graft-views-uri")
     val sfUri = dir.toUri.toString.stripSuffix("/")
@@ -219,15 +220,17 @@ class ExtensionsSpec extends AnyFunSuite {
     def writeDocs(n: Int): Unit =
       docs.limit(n).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     writeDocs(60)
-    val key = Dedup.cacheKeyFor(s, sfUri, "v", "documents")
+    def entry(): AnyRef = Artifacts.cached(s, sfUri, "v")(new Object)
+    val e0 = entry()
+    assert(entry() eq e0)
     assert(Dedup.inputBytes(s, sfUri, "documents") > 0)
     GraftViews.register(s, sfUri, only = Set("quality_filter"))
     assert(s.catalog.tableExists("documents"))
     assert(s.catalog.tableExists("quality_filter"))
     assert(s.sql("SELECT count(*) FROM documents").head().getLong(0) === 60)
     writeDocs(40)
-    assert(Dedup.cacheKeyFor(s, sfUri, "v", "documents") !== key,
-      "cache key unchanged for a rewritten input")
+    assert(entry() ne e0, "cache entry kept for a rewritten input")
+    Artifacts.clear(s)
   }
 
   private object TextHashesRef {

@@ -41,7 +41,7 @@ class MinhashBaseSpec extends AnyFunSuite {
     val dir = scratchDir()
     Dedup.verifiedPairs(spark, dir).count()
     val all0 = Dedup.wordSetAll(spark, dir)
-    Dedup.clearPairsVariants(spark, dir, Seq("pairs"))
+    Artifacts.drop(spark, dir, "pairs")
     // base survives the family drop …
     assert(Dedup.wordSetAll(spark, dir) eq all0)
     // … and the family table is a fresh build, reusing that base

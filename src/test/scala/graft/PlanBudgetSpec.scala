@@ -175,13 +175,7 @@ class PlanBudgetSpec extends AnyFunSuite {
     // InMemoryTableScan where the bounded-witness subtree (pool filter,
     // grid generate) lives — an order-dependent false failure. The
     // canonical plan a user first compiles is the cold one.
-    graft.operators.Dedup.clearCaches(spark)
-    graft.operators.TextAnalysis.clearCaches(spark)
-    graft.operators.LangModel.clearCaches(spark)
-    graft.operators.Similarity.clearCaches(spark)
-    graft.operators.Sampling.clearCaches(spark)
-    graft.operators.Curation.clearCaches(spark)
-    graft.streaming.PipelineStreams.clearCaches(spark)
+    Artifacts.clear(spark)
     // ...and test-level .cache() entries from sibling suites (e.g.
     // PipelineSpec caches whole query results): CacheManager would
     // substitute a matching cached plan at the TOP of the audited query,

@@ -436,8 +436,7 @@ class ScaleGuardSpec extends AnyFunSuite {
     // plan) makes CacheManager wrap the checkpoint leaf in an
     // InMemoryRelation — same data source, different leaf KIND, and
     // this test asserts the kind
-    Dedup.clearCaches(spark)
-    graft.streaming.PipelineStreams.clearCaches(spark)
+    Artifacts.clear(spark)
     // force the artifacts (what a production session's first consumer,
     // or Bench's artifact rows, would have done)
     Dedup.cachedSimhash(spark, sf).queryExecution.toRdd.count()

@@ -50,14 +50,14 @@ class SharedSubtreeSpec extends AnyFunSuite {
     val dsir0 = Sampling.dsirRatioTable(spark, dir)
     val flags0 = Curation.decontaminate(spark, dir)
     // dropping the dsir table keeps the mix plan, and vice versa
-    Sampling.clearDsir(spark, dir)
+    Artifacts.drop(spark, dir, "dsir_ratio")
     assert(Sampling.sourceMixPlan(spark, dir) eq plan0)
-    Sampling.clearSourceMix(spark, dir)
+    Artifacts.drop(spark, dir, "source_mix")
     assert(Sampling.sourceMixPlan(spark, dir) ne plan0)
     assert(Sampling.dsirRatioTable(spark, dir) ne dsir0)
     // dropping the contamination flags keeps the decision entry warm
     val decided0 = Curation.curateCorpus(spark, dir)
-    Curation.clearDecontam(spark, dir)
+    Artifacts.drop(spark, dir, "decontam")
     assert(Curation.curateCorpus(spark, dir) eq decided0)
     assert(Curation.decontaminate(spark, dir) ne flags0)
   }
@@ -80,16 +80,16 @@ class SharedSubtreeSpec extends AnyFunSuite {
     val gopher0 = Curation.qualityFilter(spark, dir)
     val rep0 = Curation.qualityRepetition(spark, dir)
     // dropping the inverted index keeps the vocab table, and vice versa
-    graft.operators.TextAnalysis.clearTermCounts(spark, dir)
+    Artifacts.drop(spark, dir, "term_counts")
     assert(graft.operators.TextAnalysis.vocabCoverage(spark, dir) eq vocab0)
     assert(graft.operators.TextAnalysis.termCounts(spark, dir) ne tc0)
-    graft.operators.TextAnalysis.clearVocabCov(spark, dir)
+    Artifacts.drop(spark, dir, "vocab_cov")
     assert(graft.operators.TextAnalysis.vocabCoverage(spark, dir) ne vocab0)
     // the two Curation kernel legs drop independently
-    Curation.clearQualityFlags(spark, dir)
+    Artifacts.drop(spark, dir, "quality_flags")
     assert(Curation.qualityRepetition(spark, dir) eq rep0)
     assert(Curation.qualityFilter(spark, dir) ne gopher0)
-    Curation.clearRepSignals(spark, dir)
+    Artifacts.drop(spark, dir, "rep_signals")
     assert(Curation.qualityRepetition(spark, dir) ne rep0)
   }
 
@@ -98,13 +98,13 @@ class SharedSubtreeSpec extends AnyFunSuite {
     def sortedRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().sortBy(_.getLong(0)).toSeq
     val vocab = sortedRows(graft.operators.TextAnalysis.vocabCoverage(spark, dir))
-    graft.operators.TextAnalysis.clearVocabCov(spark, dir)
+    Artifacts.drop(spark, dir, "vocab_cov")
     assert(sortedRows(graft.operators.TextAnalysis.vocabCoverage(spark, dir)) == vocab)
     val gopher = sortedRows(Curation.qualityFilter(spark, dir))
-    Curation.clearQualityFlags(spark, dir)
+    Artifacts.drop(spark, dir, "quality_flags")
     assert(sortedRows(Curation.qualityFilter(spark, dir)) == gopher)
     val rep = sortedRows(Curation.qualityRepetition(spark, dir))
-    Curation.clearRepSignals(spark, dir)
+    Artifacts.drop(spark, dir, "rep_signals")
     assert(sortedRows(Curation.qualityRepetition(spark, dir)) == rep)
   }
 
@@ -124,7 +124,7 @@ class SharedSubtreeSpec extends AnyFunSuite {
     // variant drop evicts one method without touching siblings, and the
     // rebuilt sliver is row-identical to the cached one
     val rows0 = pq0.collect().map(_.toString).sorted.toSeq
-    Sim.clearAnnMethods(spark, dir)
+    Artifacts.drop(spark, dir, Sim.RecallMethods.map("ann_" + _): _*)
     val pq1 = Sim.embeddingAnnPq(spark, dir)
     assert(pq1 ne pq0)
     assert(pq1.collect().map(_.toString).sorted.toSeq == rows0)
@@ -133,11 +133,11 @@ class SharedSubtreeSpec extends AnyFunSuite {
   test("cached mix plan and flags equal a fresh rebuild row-for-row") {
     val dir = scratchDir()
     val plan = Sampling.sourceMixPlan(spark, dir).collect().sortBy(_.getString(0))
-    Sampling.clearSourceMix(spark, dir)
+    Artifacts.drop(spark, dir, "source_mix")
     val fresh = Sampling.sourceMixPlan(spark, dir).collect().sortBy(_.getString(0))
     assert(plan.toSeq == fresh.toSeq)
     val flags = Curation.decontaminate(spark, dir).collect().sortBy(_.getLong(0))
-    Curation.clearDecontam(spark, dir)
+    Artifacts.drop(spark, dir, "decontam")
     val freshF = Curation.decontaminate(spark, dir).collect().sortBy(_.getLong(0))
     assert(flags.toSeq == freshF.toSeq)
   }
