@@ -135,7 +135,8 @@ object Artifacts {
                             build: (SparkSession, String) => Unit,
                             snapshot: Boolean = false) {
     def drop(spark: SparkSession, sfDir: String): Unit =
-      if (snapshot) variants.foreach(graft.sources.LogTable.dropSnapshots(sfDir, _))
+      if (snapshot)
+        variants.foreach(graft.sources.LogTable.dropSnapshots(spark, sfDir, _))
       else Artifacts.drop(spark, sfDir, variants: _*)
   }
 

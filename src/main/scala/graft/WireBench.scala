@@ -26,7 +26,8 @@ import graft.protocol.Payloads.WireMessage
   * Usage: `sbt "runMain graft.WireBench [msgsSmall] [msgsLarge]"`.
   * Emits one JSON line AND appends it (with a timestamp and the host's
   * 1-minute loadavg for window context) to
-  * `tools/wirebench_history.jsonl` (r16 verdict #4) — the same
+  * `tools/wirebench_history.jsonl` under the working directory (run it
+  * from the repo root; r16 verdict #4) — the same
   * committed-history protocol the window factors use, so a regression
   * in the socket path is visible across rounds instead of living in a
   * one-time hand-run. Not a bench-gate row on purpose: a streaming
@@ -118,7 +119,9 @@ object WireBench {
       catch { case scala.util.control.NonFatal(_) => "-1" }
     val line = s"""{"metric":"wire_msgs_per_sec","unit":"msgs/sec","n_small":$nSmall,"n_large":$nLarge,"rates":$qs}"""
     println(line)
-    val hist = new java.io.File("/root/repo/tools/wirebench_history.jsonl")
+    // the committed history under the repo's tools/, resolved against the
+    // working directory (sbt runs forked mains from the project root)
+    val hist = new java.io.File("tools/wirebench_history.jsonl")
     if (hist.getParentFile.isDirectory) {
       val w = new java.io.FileWriter(hist, true)
       try w.write(s"""{"ts":${System.currentTimeMillis()},"loadavg_1m":$loadavg,"n_small":$nSmall,"n_large":$nLarge,"rates":$qs}""" + "\n")

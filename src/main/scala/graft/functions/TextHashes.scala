@@ -312,6 +312,30 @@ object TextHashes {
     override protected def withNewChildInternal(c: Expression) = copy(child = c)
   }
 
+  /** The elements of a long array, sorted ascending and distinct: the
+    * set form [[jaccardSorted]] merges. Sorts `a` in place. */
+  private[graft] def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** |A∩B| / (|A|+|B|-|A∩B|) of two sorted distinct sets, by merge. */
+  private[graft] def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
+    var i = 0; var j = 0; var inter = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
+      else if (a(i) < b(j)) i += 1
+      else j += 1
+    }
+    inter.toDouble / (a.length + b.length - inter)
+  }
+
   /** jaccard_long(array<long>, array<long>) -> double: DISTINCT-set
     * Jaccard = |A∩B| / (|A|+|B|-|A∩B|) via sort-merge (no boxing, no
     * intermediate arrays) — same value as
@@ -321,27 +345,66 @@ object TextHashes {
       extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
       with KernelCodegenBinary {
     override def dataType: DataType = DoubleType
-    private def sortedDistinct(d: ArrayData): Array[Long] = {
-      val a = d.toLongArray()
-      java.util.Arrays.sort(a)
-      var n = 0
-      var i = 0
-      while (i < a.length) {
-        if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
-        i += 1
+    override protected def nullSafeEval(l: Any, r: Any): Any =
+      jaccardSorted(sortedDistinct(l.asInstanceOf[ArrayData].toLongArray()),
+        sortedDistinct(r.asInstanceOf[ArrayData].toLongArray()))
+    override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+      copy(left = l, right = r)
+  }
+
+  /** A gram-set band index held in memory: per band j, the probe keys
+    * of that band mapped to the indices of the base reps that carry them;
+    * per rep, its id and its gram-hash set, sorted and distinct, stored
+    * once however many bands it sits in. Built on the driver and
+    * broadcast; [[NgramNearDup]] reads it on the executors. */
+  final class NgramBandMap(val bands: Array[Map[String, Array[Int]]],
+                           val ids: Array[Long],
+                           val sets: Array[Array[Long]]) extends Serializable
+
+  /** ngram_near_dup(probe keys, gram hashes) -> struct(n_collisions,
+    * max_jaccard, example_base_doc): the banded gram-set probe of one doc
+    * against a broadcast [[NgramBandMap]], in one pass. Element j of the
+    * key array is the doc's band-j probe key. Every rep the key finds is
+    * a candidate; a candidate counts when its Jaccard, rounded half-up to
+    * 6 places as SQL `round(j, 6)` rounds, is at least `threshold`. The
+    * result is the count of such (band, rep) collisions, their largest
+    * rounded Jaccard and their smallest rep id, or null when no
+    * candidate passes: the per-doc rollup of the equi-join form. */
+  case class NgramNearDup(left: Expression, right: Expression,
+      index: org.apache.spark.broadcast.Broadcast[NgramBandMap],
+      threshold: Double)
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+      with KernelCodegenBinary {
+    override def dataType: DataType = StructType(Seq(
+      StructField("n_collisions", LongType, nullable = false),
+      StructField("max_jaccard", DoubleType, nullable = false),
+      StructField("example_base_doc", LongType, nullable = false)))
+    override def nullable: Boolean = true
+    override protected def nullSafeEval(k: Any, h: Any): Any = {
+      val keys = k.asInstanceOf[ArrayData]
+      val m = index.value
+      val set = sortedDistinct(h.asInstanceOf[ArrayData].toLongArray())
+      var n = 0L
+      var best = 0.0
+      var example = Long.MaxValue
+      var j = 0
+      while (j < keys.numElements() && j < m.bands.length) {
+        if (!keys.isNullAt(j)) {
+          val reps = m.bands(j).getOrElse(keys.getUTF8String(j).toString, null)
+          if (reps != null) reps.foreach { r =>
+            val jac = java.math.BigDecimal.valueOf(jaccardSorted(set, m.sets(r)))
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+            if (jac >= threshold) {
+              n += 1
+              best = math.max(best, jac)
+              example = math.min(example, m.ids(r))
+            }
+          }
+        }
+        j += 1
       }
-      java.util.Arrays.copyOf(a, n)
-    }
-    override protected def nullSafeEval(l: Any, r: Any): Any = {
-      val a = sortedDistinct(l.asInstanceOf[ArrayData])
-      val b = sortedDistinct(r.asInstanceOf[ArrayData])
-      var i = 0; var j = 0; var inter = 0
-      while (i < a.length && j < b.length) {
-        if (a(i) == b(j)) { inter += 1; i += 1; j += 1 }
-        else if (a(i) < b(j)) i += 1
-        else j += 1
-      }
-      inter.toDouble / (a.length + b.length - inter)
+      if (n == 0) null
+      else org.apache.spark.sql.catalyst.InternalRow(n, best, example)
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
@@ -690,6 +753,10 @@ object TextHashes {
     column(StopwordHits(expression(c), tables))
   def jaccard_long(a: Column, b: Column): Column =
     column(JaccardLong(expression(a), expression(b)))
+  def ngram_near_dup(keys: Column, hgs: Column,
+      index: org.apache.spark.broadcast.Broadcast[NgramBandMap],
+      threshold: Double): Column =
+    column(NgramNearDup(expression(keys), expression(hgs), index, threshold))
   def char_grams_distinct(c: Column, n: Int): Column =
     column(CharGramsDistinct(expression(c), n))
   def bpe_count(c: Column): Column = column(BpeCount(expression(c)))

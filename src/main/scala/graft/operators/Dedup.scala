@@ -1280,14 +1280,9 @@ object Dedup {
     * streaming gate, mirroring [[simhashBlockKeys]]. */
   private[graft] def ngramBandKeys(fp: DataFrame,
                                    familyOffset: Int = 0): DataFrame = {
-    val sig = fp.withColumn("sigs",
-      graft.functions.TextHashes.minhash_sigs(col("hgs"),
-        (0 until NumHashes).map(i => mixKey(familyOffset + i))))
+    val sig = fp.withColumn("sigs", ngramSigs(col("hgs"), familyOffset))
     val keys = array((0 until NgramNumBands).map { j =>
-      struct(lit(j).as("band_j"),
-        concat_ws("_", (0 until NgramBandSize).map(r =>
-          element_at(col("sigs"), j * NgramBandSize + r + 1)): _*)
-          .as("band_key"))
+      struct(lit(j).as("band_j"), ngramBandKey(col("sigs"), j).as("band_key"))
     }: _*)
     // hgs RIDES THROUGH the explode (r18, the minhash bandsOf
     // discipline): the batch verify consumes it IN the band self-join
@@ -1298,6 +1293,16 @@ object Dedup {
       .withColumn("band_key", col("k.band_key"))
       .drop("k", "sigs")
   }
+
+  /** The MinHash signature a gram set is banded by. */
+  private[graft] def ngramSigs(hgs: Column, familyOffset: Int = 0): Column =
+    graft.functions.TextHashes.minhash_sigs(hgs,
+      (0 until NumHashes).map(i => mixKey(familyOffset + i)))
+
+  /** Band `j`'s key of a signature: its [[NgramBandSize]] rows joined. */
+  private def ngramBandKey(sigs: Column, j: Int): Column =
+    concat_ws("_", (0 until NgramBandSize).map(r =>
+      element_at(sigs, j * NgramBandSize + r + 1)): _*)
 
   /** Verified pairs at REPRESENTATIVE level (one per distinct collapse
     * group, doc ids = the groups' reps) — the sliver [[ngramPairsFrom]]
@@ -1445,6 +1450,40 @@ object Dedup {
   private[graft] def ngramProbeKey(lang: Column, nChars: Column,
                                    bandKey: Column): Column =
     concat_ws("\u0001", lang, nChars.cast("string"), bandKey)
+
+  /** A doc's gate probe keys as one array, element j its band-j
+    * [[ngramProbeKey]] of the signature `sigs` ([[ngramSigs]]): the keys
+    * [[ngramBandKeys]] explodes, unexploded, for a per-doc lookup in an
+    * [[ngramBandMap]]. */
+  private[graft] def ngramProbeKeys(lang: Column, nChars: Column,
+                                    sigs: Column): Column =
+    array((0 until NgramNumBands).map(j =>
+      ngramProbeKey(lang, nChars, ngramBandKey(sigs, j))): _*)
+
+  /** An n-gram gate index ([[ngramGateIndex]]'s columns) collected into
+    * a [[graft.functions.TextHashes.NgramBandMap]] on the driver. Every
+    * rep has a row in each of the [[NgramNumBands]] bands, so its gram
+    * set is read from its band-0 row alone. */
+  private[graft] def ngramBandMap(
+      index: DataFrame): graft.functions.TextHashes.NgramBandMap = {
+    val rows = index.select(col("band_j"), col("pkey"), col("base_id"),
+        when(col("band_j") === 0, col("base_hgs")))
+      .collect()
+    val reps = rows.filter(!_.isNullAt(3))
+    val repOf = reps.iterator.map(_.getLong(2)).zipWithIndex.toMap
+    def rep(id: Long): Int = repOf.getOrElse(id,
+      throw new IllegalArgumentException(
+        s"n-gram gate index: rep $id has no band-0 row"))
+    val byBand = rows.groupBy(_.getInt(0))
+    val bands = Array.tabulate(NgramNumBands)(j =>
+      byBand.getOrElse(j, Array.empty[org.apache.spark.sql.Row])
+        .groupBy(_.getString(1))
+        .map { case (k, rs) => k -> rs.map(r => rep(r.getLong(2))) })
+    new graft.functions.TextHashes.NgramBandMap(bands,
+      reps.map(_.getLong(2)),
+      reps.map(r => graft.functions.TextHashes.sortedDistinct(
+        r.getSeq[Long](3).toArray)))
+  }
 
   /** The char-3-gram gate's base index: band rows of one rep per
     * distinct (lang, length, gram set), gram sets re-attached for the

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,31 +69,37 @@ object LogTable {
       build: => DataFrame): String = synchronized {
     val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val fp = Tables.fingerprint(spark, s"$sfDir/events.parquet")
-    val tmpRoot = System.getProperty("java.io.tmpdir")
     val prefix = s"graft_${variant}_v$SemanticsVersion${tag}_"
-    val path = s"$tmpRoot/$prefix$fp"
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val path = new Path(tmpRoot, s"$prefix$fp")
+    // executors write the snapshot through fs.defaultFS, so its marker
+    // and its siblings are read through that filesystem, not the driver's
+    // local disk
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(new Path(path, "_SUCCESS"))) {
       build.write.mode("overwrite")
         .partitionBy(partitionCols: _*)
         .option("maxRecordsPerFile", RecordsPerFile.toLong)
-        .parquet(path)
+        .parquet(path.toString)
       // a regenerated input strands the previous fingerprint's snapshot —
       // sweep stale siblings so tmpdir doesn't grow without bound. AFTER
       // the new snapshot's _SUCCESS exists, never before (r17 data-plane
       // review #6): sweeping first and then failing the build (disk full,
       // kill mid-write) left the machine with NO working snapshot.
-      Option(new java.io.File(tmpRoot).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(prefix) && f.getName != s"$prefix$fp")
-        .foreach(deleteRecursively)
+      snapshots(fs, Seq(prefix)).filter(_.getName != path.getName)
+        .foreach(fs.delete(_, true))
     }
-    path
+    path.toString
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+  /** The snapshot directory: the JVM's tmpdir, on the default FS. */
+  private def tmpRoot: Path = new Path(System.getProperty("java.io.tmpdir"))
+
+  /** The snapshots under any of `prefixes`, listed through `fs`. The
+    * prefixes hold only letters, digits and '_', so none globs. */
+  private def snapshots(fs: FileSystem, prefixes: Seq[String]): Seq[Path] =
+    prefixes.flatMap(p =>
+      Option(fs.globStatus(new Path(tmpRoot, s"$p*"))).toSeq.flatten)
+      .map(_.getPath)
 
   /** Delete this sfDir's materialized snapshot(s) so the next
     * [[ensureMaterialized]]/[[ensureMaterializedTopicLog]] call
@@ -106,19 +114,30 @@ object LogTable {
     * match includes [[ensureSnapshot]]'s FULL prefix with its trailing
     * separator — an unterminated prefix would over-match sibling sfDirs
     * (dropping `/data/sf1` must not delete `/data/sf10`'s snapshots)
-    * and future double-digit semantics versions (r17 review #5). */
+    * and future double-digit semantics versions (r17 review #5). The
+    * snapshots are found through `spark`'s default filesystem, where
+    * [[ensureSnapshot]] wrote them. */
+  def dropSnapshots(spark: SparkSession, sfDir: String, variant: String): Unit =
+    dropIn(spark.sessionState.newHadoopConf(), sfDir, variant)
+
+  /** [[dropSnapshots]] through the active session's filesystem, or the
+    * process default's when no session is active (a caller may drop
+    * before it builds one). */
   def dropSnapshots(sfDir: String, variant: String = ""): Unit =
-    synchronized {
-      val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-      val variants =
-        if (variant.isEmpty) Seq("logtable", "topiclog") else Seq(variant)
-      val prefixes =
-        variants.map(v => s"graft_${v}_v$SemanticsVersion${tag}_")
-      val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
-      Option(tmpRoot.listFiles()).getOrElse(Array.empty)
-        .filter(f => prefixes.exists(f.getName.startsWith(_)))
-        .foreach(deleteRecursively)
+    SparkSession.getActiveSession match {
+      case Some(s) => dropSnapshots(s, sfDir, variant)
+      case None => dropIn(new Configuration(), sfDir, variant)
     }
+
+  private def dropIn(conf: Configuration, sfDir: String,
+                     variant: String): Unit = synchronized {
+    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    val variants =
+      if (variant.isEmpty) Seq("logtable", "topiclog") else Seq(variant)
+    val fs = tmpRoot.getFileSystem(conf)
+    snapshots(fs, variants.map(v => s"graft_${v}_v$SemanticsVersion${tag}_"))
+      .foreach(fs.delete(_, true))
+  }
 
   /** Read a materialized log back with the canonical column types (the
     * partition-dir column comes back as INT; the log model uses LONG).

@@ -137,11 +137,19 @@ class StreamGateScaleSpec extends AnyFunSuite {
   private def writerBatch(docs: DataFrame,
       writer: (DataFrame, (DataFrame, Long) => Unit) =>
         DataStreamWriter[Row]): (Set[Long], String, String) = {
+    val (rows, plan, desc) = writerRows(docs, writer)
+    (rows.map(_.getLong(0)), plan, desc)
+  }
+
+  /** [[writerBatch]] with the rows the sink received. */
+  private def writerRows(docs: DataFrame,
+      writer: (DataFrame, (DataFrame, Long) => Unit) =>
+        DataStreamWriter[Row]): (Set[Row], String, String) = {
     val input = MemoryStream[StreamDoc](spark)
-    @volatile var got = (Set.empty[Long], "", "")
+    @volatile var got = (Set.empty[Row], "", "")
     val q = writer(input.toDF(), (df, _) => {
         val plan = df.queryExecution.executedPlan.toString
-        got = (df.select("doc_id").collect().map(_.getLong(0)).toSet, plan,
+        got = (df.collect().toSet, plan,
           spark.sparkContext.getLocalProperty("spark.job.description"))
       })
       .option("checkpointLocation",
@@ -492,6 +500,145 @@ class StreamGateScaleSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
+  }
+
+  /** `n` ingest docs cycling over sf0.01's documents, every other one
+    * with one letter changed inside a long word (its word set leaves the
+    * Bloom, most of its grams stay the base doc's). */
+  private def perturbedDocs(n: Int): DataFrame = {
+    def perturb(text: String): String = {
+      val words = text.split(" ")
+      val wi = words.indexWhere(w => w.length >= 6 && w.forall(_.isLetter))
+      if (wi < 0) text
+      else {
+        val w = words(wi)
+        words.updated(wi, w.updated(3, if (w(3) == 'q') 'z' else 'q'))
+          .mkString(" ")
+      }
+    }
+    val base = graft.sources.Tables.load(spark, lookupSf, "documents")
+      .orderBy("doc_id").select("lang", "text").collect()
+    (0 until n).map { i =>
+      val r = base(i % base.length)
+      val text = if (i % 2 == 0) r.getString(1) else perturb(r.getString(1))
+      StreamDoc(i + 1L, r.getString(0), text, new java.sql.Timestamp(0L))
+    }.toDF()
+  }
+
+  /** The sf0.01 data set, beside [[smallSf]]. */
+  private val lookupSf = s"${new java.io.File(smallSf).getParent}/sf0.01"
+
+  private def withoutBroadcast[T](body: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("ngram lookup gate: the broadcast band map answers what the " +
+      "bucketed join answers, at 15, 300 and 3,000 docs") {
+    import graft.operators.{Curation, Dedup}
+    val table = "gs_ngram_lookup_index"
+    Dedup.writeNgramIndexTable(spark, lookupSf, table)
+    try {
+      val baseKeys = graft.sources.Tables.load(spark, lookupSf, "documents")
+        .select(Curation.wordSetHash(col("text")).as("th"))
+      val bloom = Curation.bloomLiteral(baseKeys, "th",
+        PipelineStreams.GateMaxBloomBytes)
+      def curation(batch: DataFrame): Set[Row] =
+        PipelineStreams.curationIngestBatch(spark, batch, spark.table(table),
+          bloom).collect().toSet
+      Seq(15, 300, 3000).foreach { n =>
+        val batch = perturbedDocs(n)
+        val lookup = curation(batch)
+        val join = withoutBroadcast(curation(batch))
+        assert(lookup.size === n)
+        assert(lookup === join, s"$n docs: curation columns differ")
+        val near = lookup.filter(_.getAs[Boolean]("is_near_dup"))
+        assert(near.nonEmpty, s"$n docs: no near-dup evidence")
+        assert(near.forall(r => r.getAs[Double]("max_jaccard") >= 0.5))
+
+        val indexed = PipelineStreams
+          .ngramNearDupStreamIndexed(spark, batch, table).collect().toSet
+        val (written, plan, desc) = writerRows(batch,
+          PipelineStreams.ngramNearDupWriter(spark, _, table)(_))
+        assert(written === indexed, s"$n docs: ngram writer columns differ")
+        assert(written.map(_.getLong(0)) ===
+          near.map(_.getAs[Long]("doc_id")))
+        assert(desc === "ngram gate: sink write")
+        assert(!plan.contains("Join") && !plan.contains("Exchange"),
+          plan.take(2000))
+      }
+
+      // the per-batch plan of the composite writer: a projection under
+      // the default threshold, the bucketed join without broadcasts
+      val batch = perturbedDocs(15)
+      def curationPlan(): String = writerRows(batch,
+        PipelineStreams.curationIngestWriter(spark, _, table, lookupSf)(_))._2
+      val lookupPlan = curationPlan()
+      assert(!lookupPlan.contains("Join") && !lookupPlan.contains("Exchange"),
+        lookupPlan.take(3000))
+      val joinPlan = withoutBroadcast(curationPlan())
+      assert(joinPlan.contains("SortMergeJoin"), joinPlan.take(3000))
+      assert(joinPlan.contains("Bucketed: true"), joinPlan.take(3000))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
+  test("ngram lookup gate: a 15-doc batch reads the same records " +
+      "against a 10x index") {
+    import graft.operators.Dedup
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageSubmitted, SparkListenerTaskEnd}
+    /** Input records of the tasks of `curation gate: sink write` jobs. */
+    class GateRecords extends SparkListener {
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val records = new java.util.concurrent.atomic.AtomicLong
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty(
+            "spark.job.description") == "curation gate: sink write"))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val batch = perturbedDocs(15)
+    def recordsRead(sf: String, table: String): Long = {
+      val l = new GateRecords
+      val input = MemoryStream[StreamDoc](spark)
+      val q = PipelineStreams.curationIngestWriter(spark, input.toDF(),
+          table, sf)((d, _) => d.collect(): Unit)
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("gs_records").toString)
+        .start()
+      spark.sparkContext.addSparkListener(l)
+      try {
+        input.addData(batch.as[StreamDoc].collect().toIndexedSeq)
+        q.processAllAvailable()
+        org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
+        l.records.get
+      } finally {
+        q.stop()
+        spark.sparkContext.removeSparkListener(l)
+      }
+    }
+    // sf0.001 and sf0.01 hold the same 500 documents; sf0.1 holds 5,000
+    val small = (lookupSf, "gs_ngram_records_small")
+    val big = (smallSf, "gs_ngram_records_big")
+    Seq(small, big).foreach { case (sf, t) =>
+      Dedup.writeNgramIndexTable(spark, sf, t) }
+    try {
+      val rows = Seq(small, big).map { case (_, t) => spark.table(t).count() }
+      assert(rows(1) >= 5 * rows(0), s"index rows $rows: not a 10x index")
+      val (s, b) = (recordsRead(small._1, small._2), recordsRead(big._1, big._2))
+      info(s"records read per batch: index of ${rows(0)} rows $s, " +
+        s"of ${rows(1)} rows $b")
+      assert(s === b, "the per-batch probe reads the index")
+      // the guard sees a scan: the join form reads each index whole
+      val (js, jb) = withoutBroadcast(
+        (recordsRead(small._1, small._2), recordsRead(big._1, big._2)))
+      assert(jb - js === rows(1) - rows(0))
+    } finally Seq(small, big).foreach { case (_, t) =>
+      spark.sql(s"DROP TABLE IF EXISTS $t") }
   }
 
   test("DSIR importance gate: per-batch time flat at a 10x base") {
