@@ -1463,26 +1463,27 @@ object Dedup {
   /** An n-gram gate index ([[ngramGateIndex]]'s columns) collected into
     * a [[graft.functions.TextHashes.NgramBandMap]] on the driver. Every
     * rep has a row in each of the [[NgramNumBands]] bands, so its gram
-    * set is read from its band-0 row alone. */
+    * set is read from its band-0 row alone; the rows are decoded by a
+    * typed encoder, so gram sets arrive as unboxed `long[]`. */
   private[graft] def ngramBandMap(
       index: DataFrame): graft.functions.TextHashes.NgramBandMap = {
+    import index.sparkSession.implicits._
     val rows = index.select(col("band_j"), col("pkey"), col("base_id"),
         when(col("band_j") === 0, col("base_hgs")))
+      .as[(Int, String, Long, Array[Long])]
       .collect()
-    val reps = rows.filter(!_.isNullAt(3))
-    val repOf = reps.iterator.map(_.getLong(2)).zipWithIndex.toMap
+    val reps = rows.filter(_._4 != null)
+    val repOf = reps.iterator.map(_._3).zipWithIndex.toMap
     def rep(id: Long): Int = repOf.getOrElse(id,
       throw new IllegalArgumentException(
         s"n-gram gate index: rep $id has no band-0 row"))
-    val byBand = rows.groupBy(_.getInt(0))
+    val byBand = rows.groupBy(_._1)
     val bands = Array.tabulate(NgramNumBands)(j =>
-      byBand.getOrElse(j, Array.empty[org.apache.spark.sql.Row])
-        .groupBy(_.getString(1))
-        .map { case (k, rs) => k -> rs.map(r => rep(r.getLong(2))) })
-    new graft.functions.TextHashes.NgramBandMap(bands,
-      reps.map(_.getLong(2)),
-      reps.map(r => graft.functions.TextHashes.sortedDistinct(
-        r.getSeq[Long](3).toArray)))
+      byBand.getOrElse(j, Array.empty[(Int, String, Long, Array[Long])])
+        .groupBy(_._2)
+        .map { case (k, rs) => k -> rs.map(r => rep(r._3)) })
+    new graft.functions.TextHashes.NgramBandMap(bands, reps.map(_._3),
+      reps.map(r => graft.functions.TextHashes.sortedDistinct(r._4)))
   }
 
   /** The char-3-gram gate's base index: band rows of one rep per

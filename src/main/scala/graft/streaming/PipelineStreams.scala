@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout,
-  OutputMode}
+  OutputMode, StreamingQueryListener}
 
 import graft.operators.{Curation, TextAnalysis}
 
@@ -448,15 +449,39 @@ object PipelineStreams {
     * cumulative update-mode state — the gate decision is the same, the
     * counts reset. */
   private def gateWriter(spark: SparkSession, docs: DataFrame, gate: String,
-      sink: (DataFrame, Long) => Unit)(probe: DataFrame => DataFrame)
-      : DataStreamWriter[Row] =
+      sink: (DataFrame, Long) => Unit, broadcasts: Seq[Broadcast[_]] = Nil)(
+      probe: DataFrame => DataFrame): DataStreamWriter[Row] = {
+    // the queries this writer has run; a writer may be started again,
+    // e.g. to resume from its checkpoint, so each query gets its own hook
+    val queries = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     docs.writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
       val sc = spark.sparkContext
+      val query = sc.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+      if (broadcasts.nonEmpty && query != null && queries.add(query))
+        docs.sparkSession.streams.addListener(
+          new UnpersistOnStop(docs.sparkSession, query, broadcasts))
       // restored afterwards: the streaming engine's per-batch description
       val prior = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"$gate gate: sink write")
       try sink(probe(b.toDF()), id) finally sc.setJobDescription(prior)
     }
+  }
+
+  /** When the query `query` terminates, drops the executors' copies of
+    * `broadcasts` and removes itself. The driver keeps each value, so a
+    * later query of the same writer re-sends it rather than failing;
+    * the driver's copy goes when the writer is garbage-collected. */
+  private final class UnpersistOnStop(spark: SparkSession, query: String,
+      broadcasts: Seq[Broadcast[_]]) extends StreamingQueryListener {
+    import StreamingQueryListener._
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      if (e.id.toString == query) {
+        broadcasts.foreach(_.unpersist(blocking = false))
+        spark.streams.removeListener(this)
+      }
+  }
 
   /** Streaming char-3-gram Jaccard near-dup detection against a STATIC
     * base corpus — the ingest-time shape of `ngram_jaccard`, completing
@@ -500,12 +525,8 @@ object PipelineStreams {
     * variants. */
   private def ngramProbe(docs: DataFrame, base: DataFrame): DataFrame = {
     import graft.operators.Dedup
-    docs.select(col("doc_id"), col("lang"),
-        TextAnalysis.normText(col("text")).as("ntext"))
-      .withColumn("n_chars_norm", length(col("ntext")).cast("long"))
+    withNgramGrams(docs.select(col("doc_id"), col("lang"), col("text")))
       .filter(col("n_chars_norm") >= Dedup.NgramMinChars)
-      .withColumn("hgs", graft.functions.TextHashes.hash32_array(
-        graft.functions.TextHashes.char_grams_distinct(col("ntext"), 3)))
       // hgs rides the band explode since r18 — rename, don't duplicate
       .transform(Dedup.ngramBandKeys(_))
       .withColumnRenamed("hgs", "stream_hgs")
@@ -521,6 +542,19 @@ object PipelineStreams {
         min("base_id").as("example_base_doc"))
   }
 
+  /** Adds a doc's gram set as both n-gram gate forms read it: `ntext`,
+    * the normalized text, `n_chars_norm`, its length, and `hgs`, its
+    * distinct char-3-gram hashes. The docs [[ngramProbe]] and
+    * [[withNgramNearDup]] compare are the ones this defines. Needs
+    * `text`. */
+  private def withNgramGrams(docs: DataFrame): DataFrame = {
+    import graft.functions.TextHashes
+    docs.withColumn("ntext", TextAnalysis.normText(col("text")))
+      .withColumn("n_chars_norm", length(col("ntext")).cast("long"))
+      .withColumn("hgs", TextHashes.hash32_array(
+        TextHashes.char_grams_distinct(col("ntext"), 3)))
+  }
+
   /** [[ngramNearDupStream]] against a BUCKETED on-disk band index
     * ([[graft.operators.Dedup.writeNgramIndexTable]]): no base-side
     * Exchange per micro-batch (the base side is still scanned and sorted
@@ -533,30 +567,37 @@ object PipelineStreams {
 
   /** foreachBatch form of [[ngramNearDupStreamIndexed]], with the same
     * output: (doc_id, n_collisions, max_jaccard, example_base_doc) per
-    * flagged doc. The index is sized once, at construction, by the test
-    * the planner uses to broadcast a join side: its optimized-plan size
-    * against `spark.sql.autoBroadcastJoinThreshold`. An index under it is
+    * flagged doc. The index is sized once, at construction
+    * ([[ngramIndex]]). An index under the broadcast threshold is
     * collected into a broadcast band map and each micro-batch is one
     * projection: a per-doc lookup that neither joins, shuffles nor reads
     * the index ([[withNgramNearDup]]). A larger index keeps the bucketed
     * join.
+    *
+    * The sink sees the batch's partitioning: in the lookup form, one
+    * partition per stream source partition, as any narrow streaming
+    * query; in the join form, the shuffle's (one, for a small batch). A
+    * file sink therefore writes a file per source partition per batch
+    * in the lookup form.
     * The sink job is named `ngram gate: sink write` ([[gateWriter]]). */
   def ngramNearDupWriter(spark: SparkSession, docs: DataFrame,
       indexTable: String)(sink: (DataFrame, Long) => Unit)
       : DataStreamWriter[Row] = {
     requireBanding(spark, indexTable, graft.operators.Dedup.NgramBanding)
     val index = ngramIndex(spark, spark.table(indexTable))
-    gateWriter(spark, docs, "ngram", sink)(b => index.lookup match {
-      // the filter sits above a one-element explode: pushed down through
-      // the projections, it would evaluate the hashing and the lookup a
-      // second time
-      case Some(bands) =>
-        withNgramNearDup(b, bands)
-          .select(col("doc_id"), explode(array(col("near"))).as("near"))
-          .filter(col("near").isNotNull)
-          .select(col("doc_id"), col("near.*"))
-      case None => ngramProbe(b, index.base)
-    })
+    gateWriter(spark, docs, "ngram", sink, index.lookup.toSeq) { b =>
+      index.lookup match {
+        // the filter sits above a one-element explode: pushed down through
+        // the projections, it would evaluate the hashing and the lookup a
+        // second time
+        case Some(bands) =>
+          withNgramNearDup(b, bands)
+            .select(col("doc_id"), explode(array(col("near"))).as("near"))
+            .filter(col("near").isNotNull)
+            .select(col("doc_id"), col("near.*"))
+        case None => ngramProbe(b, index.base)
+      }
+    }
   }
 
   /** An n-gram gate index as a writer probes it: the table's frame, and
@@ -565,6 +606,14 @@ object PipelineStreams {
   private final case class NgramIndex(base: DataFrame,
       lookup: Option[Broadcast[graft.functions.TextHashes.NgramBandMap]])
 
+  /** Sizes `base` by the test the planner uses to broadcast a join side:
+    * its optimized-plan `sizeInBytes` against
+    * `spark.sql.autoBroadcastJoinThreshold`. For an index table that is
+    * the bytes of its files on disk (compressed parquet), not the size
+    * of the map the driver builds from it, which is usually larger, as
+    * the planner's hashed relation usually is than its file scan. The
+    * collect is bounded by `spark.driver.maxResultSize`, as a broadcast
+    * join's is. */
   private def ngramIndex(spark: SparkSession, base: DataFrame): NgramIndex = {
     val size = base.queryExecution.optimizedPlan.stats.sizeInBytes
     NgramIndex(base,
@@ -578,22 +627,22 @@ object PipelineStreams {
     * [[ngramProbe]] would emit no row. The doc is normalized, gram-hashed
     * and banded by the same Column code the join form explodes, and
     * [[graft.functions.TextHashes.NgramNearDup]] verifies its candidates
-    * with the join form's rounded-Jaccard rule. Needs `lang` and `text`. */
+    * with the join form's rounded-Jaccard rule. Needs `lang` and `text`;
+    * any `ntext`, `n_chars_norm` or `hgs` the frame has is replaced and
+    * dropped. */
   private def withNgramNearDup(docs: DataFrame,
       bands: Broadcast[graft.functions.TextHashes.NgramBandMap]): DataFrame = {
     import graft.operators.Dedup
     import graft.functions.TextHashes
     // one column per stage, as ngramProbe's, so each is computed once
-    docs.withColumn("ng_text", TextAnalysis.normText(col("text")))
-      .withColumn("ng_chars", length(col("ng_text")).cast("long"))
-      .withColumn("ng_hgs", TextHashes.hash32_array(
-        TextHashes.char_grams_distinct(col("ng_text"), 3)))
-      .withColumn("ng_sigs", Dedup.ngramSigs(col("ng_hgs")))
-      .withColumn("near", when(col("ng_chars") >= Dedup.NgramMinChars,
+    withNgramGrams(docs)
+      .withColumn("ng_sigs", Dedup.ngramSigs(col("hgs")))
+      .withColumn("near", when(col("n_chars_norm") >= Dedup.NgramMinChars,
         TextHashes.ngram_near_dup(
-          Dedup.ngramProbeKeys(col("lang"), col("ng_chars"), col("ng_sigs")),
-          col("ng_hgs"), bands, Dedup.NgramJaccardThreshold)))
-      .drop("ng_text", "ng_chars", "ng_hgs", "ng_sigs")
+          Dedup.ngramProbeKeys(col("lang"), col("n_chars_norm"),
+            col("ng_sigs")),
+          col("hgs"), bands, Dedup.NgramJaccardThreshold)))
+      .drop("ntext", "n_chars_norm", "hgs", "ng_sigs")
   }
 
   /** Streaming line (span) dedup against a STATIC base corpus — the
@@ -1090,7 +1139,9 @@ object PipelineStreams {
     *     reads the batch once and never the index. Above it, the batch's
     *     band rows join the bucketed index (no base-side Exchange, but
     *     every batch scans and sorts the index) and the evidence joins
-    *     back on `doc_id`.
+    *     back on `doc_id`. As in [[ngramNearDupWriter]], the sink sees
+    *     one partition per source partition in the lookup form and the
+    *     shuffle's in the join form.
     *
     * Output per doc: the evidence flags + the first-match
     * `drop_reason` ('eval_holdout' > 'quality' > 'duplicate' >
@@ -1111,13 +1162,16 @@ object PipelineStreams {
     val baseKeys = graft.sources.Tables.load(spark, baseSfDir, "documents")
       .select(Curation.wordSetHash(col("text")).as("th"))
     val bloomProbe = Curation.bloomLiteral(baseKeys, "th", maxBloomBytes)
-    gateWriter(spark, docs, "curation", sink)(
+    gateWriter(spark, docs, "curation", sink, index.lookup.toSeq)(
       curationIngest(_, index, bloomProbe))
   }
 
   /** One micro-batch of [[curationIngestWriter]] — split out so specs
     * can drive it as a plain batch function. Each call sizes `ngramBase`
-    * (and collects it when it is small), as the writer does once. `pushed`
+    * (and collects it when it is small), as the writer does once. The
+    * frame is lazy and may run any number of times, so the call's band
+    * map broadcast is left to the context cleaner, which drops it once
+    * the frame is unreachable. `pushed`
     * has no effect: the benchmark's ingest check is its only caller that
     * passes it, and the next change to the benchmark drops the argument. */
   private[graft] def curationIngestBatch(

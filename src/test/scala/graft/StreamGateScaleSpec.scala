@@ -641,6 +641,39 @@ class StreamGateScaleSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t") }
   }
 
+  test("ngram lookup gate: each query of a writer drops its stop hook " +
+      "when it stops, and the writer starts again") {
+    import graft.operators.Dedup
+    val table = "gs_ngram_restart_index"
+    Dedup.writeNgramIndexTable(spark, lookupSf, table)
+    try {
+      val batch = perturbedDocs(15)
+      val expected = PipelineStreams
+        .ngramNearDupStreamIndexed(spark, batch, table).collect().toSet
+      assert(expected.nonEmpty)
+      val hooks = spark.streams.listListeners().length
+      val input = MemoryStream[StreamDoc](spark)
+      input.addData(batch.as[StreamDoc].collect().toIndexedSeq)
+      @volatile var got = Set.empty[Row]
+      val writer = PipelineStreams.ngramNearDupWriter(spark, input.toDF(),
+        table)((d, _) => got = d.collect().toSet)
+      (1 to 2).foreach { run =>
+        got = Set.empty
+        val q = writer.option("checkpointLocation",
+            java.nio.file.Files.createTempDirectory("gs_restart").toString)
+          .start()
+        try {
+          q.processAllAvailable()
+          assert(spark.streams.listListeners().length === hooks + 1)
+        } finally q.stop()
+        org.apache.spark.sql.graftbridge.Bridge.flushListenerBus(spark)
+        assert(got === expected, s"run $run: writer rows differ")
+        assert(spark.streams.listListeners().length === hooks,
+          s"run $run: the stop hook outlived its query")
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
   test("DSIR importance gate: per-batch time flat at a 10x base") {
     val s = docGateBatchSeconds("gs_dsir_s", "update",
       PipelineStreams.importanceWeightStream(spark, _, smallSf))

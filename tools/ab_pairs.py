@@ -2,14 +2,14 @@
 """Interleaved A/B of two checkouts on one perfbench workload.
 
     python3 tools/ab_pairs.py --parent DIR --change DIR --workload NAME \\
-        --seeds 21-30 --n 10 [--seconds 8] [--log runs.jsonl]
-    python3 tools/ab_pairs.py --summarize runs.jsonl
+        --seeds 21-30 --n 10
 
 Runs `perfbench/run.py --trace 0` N times in each checkout, one pair per
 seed (the seed list repeats if shorter than N), alternating which side
-runs first. Each run's last stdout line is its JSON result; with --log
-every run is appended there as one JSON line, and --summarize re-reads
-such a log without running anything.
+runs first. Both sides run for the `run_seconds` of the change
+checkout's BENCHMARK.json; the two checkouts must declare the same
+value. Each run's last stdout line is its JSON result, echoed to stderr
+as it arrives.
 
 For every end-to-end metric of the change checkout's BENCHMARK.json it
 prints each side's median and quartiles, the pairs the change wins (ties
@@ -132,6 +132,11 @@ def report(runs, end_to_end):
     return lines
 
 
+def load_bench(checkout):
+    with open(os.path.join(checkout, "BENCHMARK.json")) as f:
+        return json.load(f)
+
+
 def run_once(checkout, workload, seed, seconds):
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
@@ -142,39 +147,27 @@ def run_once(checkout, workload, seed, seconds):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--parent")
-    ap.add_argument("--change")
-    ap.add_argument("--workload")
+    ap.add_argument("--parent", required=True)
+    ap.add_argument("--change", required=True)
+    ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="21-30")
     ap.add_argument("--n", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=8)
-    ap.add_argument("--log")
-    ap.add_argument("--summarize")
     args = ap.parse_args()
-    if args.summarize:
-        runs = [json.loads(l) for l in open(args.summarize) if l.strip()]
-        bench_dir = args.change or os.getcwd()
-    else:
-        if not (args.parent and args.change and args.workload):
-            ap.error("--parent, --change and --workload are required")
-        runs = []
-        for i, (seed, first) in enumerate(
-                schedule(parse_seeds(args.seeds), args.n)):
-            order = [first, "change" if first == "parent" else "parent"]
-            for side in order:
-                res = run_once(getattr(args, side), args.workload, seed,
-                               args.seconds)
-                run = {"pair": i, "side": side, "seed": seed,
-                       "workload": args.workload, "result": res}
-                runs.append(run)
-                if args.log:
-                    with open(args.log, "a") as f:
-                        f.write(json.dumps(run) + "\n")
-                print(f"pair {i} seed {seed} {side}: "
-                      f"{json.dumps(res['metrics']) if res else 'no result'}",
-                      file=sys.stderr, flush=True)
-        bench_dir = args.change
-    bench = json.load(open(os.path.join(bench_dir, "BENCHMARK.json")))
+    bench = load_bench(args.change)
+    seconds = bench["run_seconds"]
+    if load_bench(args.parent).get("run_seconds") != seconds:
+        ap.error("parent and change BENCHMARK.json differ in run_seconds")
+    runs = []
+    for i, (seed, first) in enumerate(
+            schedule(parse_seeds(args.seeds), args.n)):
+        order = [first, "change" if first == "parent" else "parent"]
+        for side in order:
+            res = run_once(getattr(args, side), args.workload, seed, seconds)
+            runs.append({"pair": i, "side": side, "seed": seed,
+                         "result": res})
+            print(f"pair {i} seed {seed} {side}: "
+                  f"{json.dumps(res['metrics']) if res else 'no result'}",
+                  file=sys.stderr, flush=True)
     for line in report(runs, bench["end_to_end"]):
         print(line)
 
